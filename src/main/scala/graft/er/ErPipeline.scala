@@ -14,9 +14,10 @@ import graft.util.Snapshot
  *
  * Input is the long attribute layout `(profile_id, source_id, attribute,
  * value)` — the shape every loader in [[graft.sources.Wrappers]]
- * produces. Every stage boundary is Snapshot-materialized: stages chain
- * from parquet, plans stay flat, and reruns of a downstream stage don't
- * recompute the spine.
+ * produces. A stage is Snapshot-materialized only when it is returned or
+ * read by two or more later queries: those stages chain from parquet and
+ * are never recomputed, while a stage read once stays lazy and runs inside
+ * its reader's job. Only the configured weight scheme is computed.
  */
 object ErPipeline {
 
@@ -51,18 +52,19 @@ object ErPipeline {
     }
     val cb = Pipeline.cleanBlocks(keys, config.clean,
       config.smoothFactor, config.filterR, stage = Snapshot.apply)
-    val pairs = Snapshot(cb.pairs())
+    // EJS reads the pair graph again for degrees and the edge total, in
+    // both weightings; every other scheme reads it once, when weighting
+    val pairs =
+      if (config.weight == WeightType.EJS) Snapshot(cb.pairs()) else cb.pairs()
     val pstats = Snapshot(cb.profileStats)
-    val weighted = MetaBlocking.schemeView(
-      Snapshot(MetaBlocking.weightedPairsAll(pairs, pstats, cb.numberOfBlocks)),
-      config.weight)
+    val weighted = Snapshot(MetaBlocking.weightedPairs(pairs, pstats,
+      cb.numberOfBlocks, config.weight))
     // the dirty self-edge quirk (reference first_step=True) only exists
     // in single-source ER
     val selfW =
       if (config.clean) None
-      else Some(MetaBlocking.selfSchemeView(
-        Snapshot(MetaBlocking.selfWeightsAll(pstats, cb.numberOfBlocks, pairs)),
-        config.weight))
+      else Some(MetaBlocking.selfWeights(pstats, cb.numberOfBlocks,
+        config.weight, pairs = Some(pairs)))
     val candidates = Snapshot(config.pruning match {
       case "wnp" => MetaBlocking.wnp(weighted, config.thresholdType,
         config.comparisonType, config.weight, selfW = selfW)
@@ -75,10 +77,10 @@ object ErPipeline {
     val matches =
       if (config.matcher == "none") candidates
       else Snapshot(score(attrs, candidates, config))
-    val vertices = attrs.select(col("profile_id")).distinct()
-    val entities = Snapshot(graft.util.ConnectedComponents.minLabel(
-      vertices, matches, idCol = "profile_id", srcCol = "p1", dstCol = "p2",
-      labelCol = "entity_id"))
+    // minLabel already returns its last iteration's parquet reader
+    val entities = graft.util.ConnectedComponents.minLabel(
+      attrs.select(col("profile_id")).distinct(), matches,
+      idCol = "profile_id", srcCol = "p1", dstCol = "p2", labelCol = "entity_id")
     Result(candidates, matches, entities)
   }
 

@@ -13,7 +13,9 @@ import org.apache.spark.sql.functions._
  * Snapshot-materialized — without truncation the loop's plan contains the
  * previous iteration's plan twice (propagation + union), i.e. exponential
  * lineage growth, the classic iterative-graph pitfall GraphX solves with
- * checkpointing.
+ * checkpointing. The initial labels are a lazy projection of `vertices`:
+ * iteration 1 evaluates it inside its own write job, and the labels
+ * returned are always the last iteration's parquet reader.
  *
  * Shared by attribute clustering (tiny vertex set, string ids) and dedup
  * cluster assignment (document cardinality, long ids).
@@ -33,7 +35,9 @@ object ConnectedComponents {
   def minLabel(vertices: DataFrame, edges: DataFrame,
                idCol: String, srcCol: String, dstCol: String,
                labelCol: String, maxIter: Int = 50): DataFrame = {
-    var labels = Snapshot(vertices.select(col(idCol), col(idCol).as(labelCol)))
+    // the initial labels stay lazy: only iteration 1 reads them, inside
+    // its own materialization job
+    var labels = vertices.select(col(idCol), col(idCol).as(labelCol))
     val und = Snapshot(
       edges.select(col(srcCol).as("_u"), col(dstCol).as("_v"))
         .union(edges.select(col(dstCol).as("_u"), col(srcCol).as("_v"))))

@@ -9,7 +9,9 @@ import org.apache.spark.sql.DataFrame
  * with local[32], 32 tasks unrolling a cached dataset contend on the
  * global memory-manager lock per element batch, which showed up as >80%
  * SYSTEM cpu in the sf0.1 bench. Parquet writes/readers use their own
- * buffers, compress columnar, and re-read vectorized inside codegen.
+ * buffers, compress columnar, and re-read vectorized inside codegen. The
+ * reader carries the written frame's schema (made nullable, as parquet
+ * stores it), so a snapshot runs exactly one Spark job: the write.
  *
  * Storage location: `spark.graft.checkpoint.dir` — REQUIRED on a real
  * cluster, where it must point at shared storage (HDFS/S3/NFS) reachable
@@ -103,6 +105,9 @@ object Snapshot {
     // cross the network and live longer.
     val w = df.write.mode("overwrite")
     (if (explicit.isEmpty) w.option("compression", "none") else w).parquet(dir)
-    (dir, spark.read.parquet(dir))
+    // read back with the frame's own schema: inferring it from the footers
+    // costs a one-task Spark job per snapshot, and the file source makes
+    // the given schema nullable exactly as the writer stored it
+    (dir, spark.read.schema(df.schema).parquet(dir))
   }
 }

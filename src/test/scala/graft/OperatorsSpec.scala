@@ -550,6 +550,90 @@ class OperatorsSpec extends AnyFunSuite {
       s"fallback join appeared next to the custom exec:\n$p")
   }
 
+  /** StructType.asNullable, which Spark keeps private: every field,
+   * array element and map value made nullable, recursively. */
+  private def nullable(t: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    t match {
+      case s: StructType =>
+        StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+  }
+
+  test("Snapshot reader: the frame's schema made nullable, the frame's rows") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = new StructType()
+      .add("l", LongType, nullable = false)
+      .add("i", IntegerType)
+      .add("d", DoubleType, nullable = false)
+      .add("dec", DecimalType(12, 2))
+      .add("s", StringType)
+      .add("b", BooleanType)
+      .add("dt", DateType)
+      .add("ts", TimestampType)
+      .add("bin", BinaryType)
+      .add("arr", ArrayType(LongType, containsNull = false))
+      .add("m", MapType(StringType, DoubleType, valueContainsNull = false))
+      .add("st", new StructType().add("x", IntegerType, nullable = false)
+        .add("y", StringType), nullable = false)
+      .add("vec", org.apache.spark.ml.linalg.SQLDataTypes.VectorType)
+    val rows = Seq(
+      Row(1L, 7, 0.1, new java.math.BigDecimal("12.34"), "a", true,
+        java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789"),
+        Array[Byte](0, 1, -1), Seq(1L, 2L), Map("k" -> 1.5), Row(3, "y"),
+        org.apache.spark.ml.linalg.Vectors.dense(1.0, -2.0)),
+      Row(2L, null, -0.0, null, null, null, null, null, null, Seq.empty[Long],
+        Map.empty[String, Double], Row(4, null),
+        org.apache.spark.ml.linalg.Vectors.sparse(3, Array(1), Array(5.0))))
+    val df = spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*), schema)
+    val snap = graft.util.Snapshot(df)
+    assert(snap.schema == nullable(df.schema))
+    assert(snap.orderBy("l").collect().toSeq == df.orderBy("l").collect().toSeq)
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val emptySnap = graft.util.Snapshot(empty)
+    assert(emptySnap.schema == nullable(schema))
+    assert(emptySnap.count() == 0L)
+  }
+
+  test("Snapshot runs one Spark job, the write: no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    // the listener bus is asynchronous but ordered: once a marker job's
+    // start has arrived, every job started before it has been counted
+    def mark(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(tag) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(started.contains(tag), s"marker job $tag never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("snapshot-jobs-begin")
+      graft.util.Snapshot(Seq((1L, "a")).toDF("k", "v")) // one partition
+      mark("snapshot-jobs-end")
+    } finally sc.removeSparkListener(listener)
+    val seen = started.toArray(Array.empty[String]).toSeq
+    val between = seen.slice(seen.indexOf("snapshot-jobs-begin") + 1,
+      seen.indexOf("snapshot-jobs-end"))
+    assert(between.size == 1, s"Snapshot started ${between.size} jobs")
+  }
+
   // --- r10 optimization pins: Snapshot.observed fuses the convergence /
   // count action into the materialization job. These tests pin (a) the
   // metric values, (b) that the implementation does NOT go through the
@@ -586,13 +670,17 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("minLabel converges with the fused change check (ring + isolate)") {
-    // ring 1-2-3-4-1 plus isolate 9: min label propagates around the ring
-    val vs = Seq(1L, 2L, 3L, 4L, 9L).toDF("id")
+    // ring 1-2-3-4-1 plus isolate 9: min label propagates around the ring;
+    // the vertices come as a local frame and as a lazy distinct over
+    // duplicated ids, which only the first iteration evaluates
     val es = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
-    val r = graft.util.ConnectedComponents.minLabel(vs, es,
-        idCol = "id", srcCol = "p1", dstCol = "p2", labelCol = "lbl")
-      .as[(Long, Long)].collect().toMap
-    assert(r == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
+    for (vs <- Seq(Seq(1L, 2L, 3L, 4L, 9L).toDF("id"),
+        Seq(9L, 1L, 2L, 9L, 3L, 4L, 1L, 2L).toDF("id").distinct())) {
+      val r = graft.util.ConnectedComponents.minLabel(vs, es,
+          idCol = "id", srcCol = "p1", dstCol = "p2", labelCol = "lbl")
+        .as[(Long, Long)].collect().toSeq
+      assert(r.sorted == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L))
+    }
   }
 
   test("minLabel still throws when maxIter is below the diameter") {

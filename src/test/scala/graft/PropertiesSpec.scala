@@ -18,7 +18,8 @@ import graft.er._
  *  - CNP(AND) ⊆ CNP(OR) ⊆ edges, and AND retains ≤ k edges per profile;
  *  - WEP keeps a non-empty subset (max ≥ mean);
  *  - CEP keeps exactly min(K, |edges|) edges (tie quotas fill K exactly);
- *  - symmetric weight schemes produce w1 == w2 on every edge.
+ *  - symmetric weight schemes produce w1 == w2 on every edge;
+ *  - the narrow one-scheme weights equal the wide all-scheme views.
  */
 class PropertiesSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
@@ -137,6 +138,37 @@ class PropertiesSpec extends AnyFunSuite {
     }
     assert(arcsDiff > 0,
       "ARCS symmetric on every seed - the asymmetry canary lost its teeth")
+  }
+
+  /** Rows sorted, every double as its bit pattern: equality is exact. */
+  private def exactRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.mkString(","))
+
+  test("narrow weightedPairs / selfWeights equal the wide views bit for bit") {
+    for (seed <- 1 to 3) {
+      val cb = Pipeline.cleanBlocks(genKeys(seed), clean = false)
+      val pairs = graft.util.Snapshot(cb.pairs())
+      val pstats = graft.util.Snapshot(cb.profileStats)
+      val wide = graft.util.Snapshot(
+        MetaBlocking.weightedPairsAll(pairs, pstats, cb.numberOfBlocks))
+      val selfWide = graft.util.Snapshot(
+        MetaBlocking.selfWeightsAll(pstats, cb.numberOfBlocks, pairs))
+      for (wt <- WeightType.values.toSeq) {
+        val narrow = exactRows(
+          MetaBlocking.weightedPairs(pairs, pstats, cb.numberOfBlocks, wt))
+        assert(narrow.nonEmpty)
+        assert(narrow == exactRows(MetaBlocking.schemeView(wide, wt)),
+          s"seed $seed: $wt weightedPairs differs from its wide view")
+        val self = exactRows(MetaBlocking.selfWeights(pstats,
+          cb.numberOfBlocks, wt, pairs = Some(pairs)))
+        assert(self.nonEmpty)
+        assert(self == exactRows(MetaBlocking.selfSchemeView(selfWide, wt)),
+          s"seed $seed: $wt selfWeights differs from its wide view")
+      }
+    }
   }
 
   test("winnowing guarantee: any shared substring of length k+w-1 yields a shared fingerprint") {
