@@ -26,7 +26,7 @@ object Bench {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count(); () }
       catch { case e: Throwable =>
-        failed.getOrElseUpdate(name, e.toString.take(300)); ()
+        if (!failed.contains(name)) failed(name) = e.toString.take(300)
       }
       (System.nanoTime() - t0) / 1e9
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.er._
+import graft.util.Memo
 
 /**
  * ER-operator queries over the driver's synthetic tables (TESTDATA.md),
@@ -23,17 +24,13 @@ object ErQueries {
 
   /** The blocking/cleaning spine and the CBS pair graph are shared by every
    * downstream query; Verify/Bench run all queries in one session, so
-   * memoize them per (dir, clean) with the hot DataFrames persisted. This
-   * mirrors the production posture too: the pipeline output is computed
-   * once and many pruning/weighting variants are derived from it. */
-  private val cleanedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), CleanedBlocks]
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), DataFrame]
-  private val pstatsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), DataFrame]
-  private val weightedCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean, WeightType.Value), DataFrame]
+   * memoize them per (dir, clean). This mirrors the production posture
+   * too: the pipeline output is computed once and many pruning/weighting
+   * variants are derived from it. Frame artifacts are keyed by (artifact
+   * name, dir, parameters); the cleaned block collection is kept as a
+   * value (see [[graft.util.Memo]]). */
+  private val memo = new Memo[Product, Memo.Frame]
+  private val cleanedMemo = new Memo[(String, Boolean), CleanedBlocks]
 
   def partAttrs(spark: SparkSession, dir: String, twoSources: Boolean,
                 numSources: Int = 2): DataFrame =
@@ -60,22 +57,18 @@ object ErQueries {
     // staged Snapshot (parquet-on-tmpfs) at every stage boundary: caches
     // the rows, truncates the logical plan, and each stage chains from
     // the previous stage's materialization (see Pipeline.cleanBlocks doc)
-    cleanedCache.getOrElseUpdate((dir, clean),
+    cleanedMemo((dir, clean))(
       Pipeline.cleanBlocks(keys(spark, dir, twoSources = clean), clean, Smooth, FilterR,
         stage = graft.util.Snapshot.apply))
 
-  /** Persisted CBS pair graph / per-profile stats, shared by all weight
+  /** Snapshot CBS pair graph / per-profile stats, shared by all weight
    * schemes over the same cleaned block collection. */
   def cachedPairs(spark: SparkSession, dir: String, clean: Boolean): DataFrame =
-    pairsCache.getOrElseUpdate((dir, clean),
-      graft.util.Snapshot(cleaned(spark, dir, clean).pairs()))
+    memo.frame(spark, ("pairs", dir, clean))(cleaned(spark, dir, clean).pairs())
 
   def cachedProfileStats(spark: SparkSession, dir: String, clean: Boolean): DataFrame =
-    pstatsCache.getOrElseUpdate((dir, clean),
-      graft.util.Snapshot(cleaned(spark, dir, clean).profileStats))
-
-  private val wideCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Boolean), DataFrame]
+    memo.frame(spark, ("profile_stats", dir, clean))(
+      cleaned(spark, dir, clean).profileStats)
 
   /** The WIDE weighted graph — all six schemes in one pass over the cached
    * pair graph, ONE snapshot (MetaBlocking.weightedPairsAll). Per-scheme
@@ -83,37 +76,26 @@ object ErQueries {
    * the O(edges) graph instead of six, and here it collapses six snapshot
    * write+read round-trips into one. */
   def wideWeighted(s: SparkSession, d: String, clean: Boolean): DataFrame =
-    wideCache.getOrElseUpdate((d, clean),
-      graft.util.Snapshot(MetaBlocking.weightedPairsAll(cachedPairs(s, d, clean),
+    memo.frame(s, ("wide_weighted", d, clean))(
+      MetaBlocking.weightedPairsAll(cachedPairs(s, d, clean),
         cachedProfileStats(s, d, clean),
-        cleaned(s, d, clean).numberOfBlocks)))
+        cleaned(s, d, clean).numberOfBlocks))
 
   /** One scheme's weighted graph: a pruned column select over the wide
    * snapshot (bit-identical to building the scheme alone). */
   def weightedCached(s: SparkSession, d: String, clean: Boolean,
                      wt: WeightType.Value): DataFrame =
-    weightedCache.getOrElseUpdate((d, clean, wt),
-      MetaBlocking.schemeView(wideWeighted(s, d, clean), wt))
-
-  private val selfWideCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    MetaBlocking.schemeView(wideWeighted(s, d, clean), wt)
 
   /** Dirty-ER self-comparison weights (the first_step=True reference
    * quirk), all schemes in one snapshot (MetaBlocking.selfWeightsAll);
    * per-scheme views are column selects. Clean-ER queries pass None. */
   def selfWeightsCached(s: SparkSession, d: String, wt: WeightType.Value): DataFrame =
     MetaBlocking.selfSchemeView(
-      selfWideCache.getOrElseUpdate(d, graft.util.Snapshot(
+      memo.frame(s, ("self_wide", d))(
         MetaBlocking.selfWeightsAll(cachedProfileStats(s, d, clean = false),
           cleaned(s, d, clean = false).numberOfBlocks,
-          pairs = cachedPairs(s, d, clean = false)))), wt)
-
-  private val wnpCbsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val tfidfWCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val weighted3srcCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+          pairs = cachedPairs(s, d, clean = false))), wt)
 
   /** Memoized per-profile WNP thresholds for a (dir, clean, scheme,
    * threshold-type, self-edges) combination — the O(profiles) standing
@@ -121,59 +103,46 @@ object ErQueries {
    * directed view + aggregate over the O(edges) graph
    * (MetaBlocking.localThresholds). Materialized once like the weighted
    * graph it summarizes; the pruning joins stay per-run. */
-  private val wnpThMemo = new graft.util.PathMemo
-  private val wnpTh3srcMemo = new graft.util.PathMemo
   private def wnpThresholds(s: SparkSession, d: String, clean: Boolean,
                             wt: WeightType.Value, tt: ThresholdType.Value,
                             withSelf: Boolean): DataFrame =
-    wnpThMemo(s, s"$d#$clean#$wt#$tt#$withSelf")(
+    memo.frame(s, ("wnp_th", d, clean, wt, tt, withSelf))(
       MetaBlocking.localThresholds(weightedCached(s, d, clean, wt), tt,
         if (withSelf) Some(selfWeightsCached(s, d, wt)) else None))
 
   /** The WNP(CBS, AVG, OR) dirty candidate set — consumed by both the
    * pruning query and the PC/PQ evaluation; snapshot once. */
   def wnpCbsAvgOrDirty(s: SparkSession, d: String): DataFrame =
-    wnpCbsCache.getOrElseUpdate(d, graft.util.Snapshot(
+    memo.frame(s, ("wnp_cbs_avg_or", d, false))(
       MetaBlocking.wnp(weightedCached(s, d, clean = false, WeightType.CBS),
         ThresholdType.AVG, ComparisonType.OR, WeightType.CBS,
-        selfW = Some(selfWeightsCached(s, d, WeightType.CBS)))))
-
-  private val wnpCbsCleanCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        selfW = Some(selfWeightsCached(s, d, WeightType.CBS))))
 
   /** Clean twin of [[wnpCbsAvgOrDirty]], warmed the same way: the threshold
    * pass + prune joins over the clean O(edges) graph were recomputed
    * uncached in r3 (the 25s bench heavyweight). */
   def wnpCbsAvgOrClean(s: SparkSession, d: String): DataFrame =
-    wnpCbsCleanCache.getOrElseUpdate(d, graft.util.Snapshot(
+    memo.frame(s, ("wnp_cbs_avg_or", d, true))(
       MetaBlocking.wnp(weightedCached(s, d, clean = true, WeightType.CBS),
-        ThresholdType.AVG, ComparisonType.OR, WeightType.CBS)))
-
-  private val directedCbsCleanCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        ThresholdType.AVG, ComparisonType.OR, WeightType.CBS))
 
   /** Directed (a, b, w) view of the clean CBS graph, snapshot once: CNP's
    * retention pass otherwise re-derives it (two wide-snapshot scans + a
    * union) on every call — r3's wide-snapshot read amplification. */
   def directedCbsClean(s: SparkSession, d: String): DataFrame =
-    directedCbsCleanCache.getOrElseUpdate(d, graft.util.Snapshot(
-      MetaBlocking.directedEdges(weightedCached(s, d, clean = true, WeightType.CBS))))
-
-  private val matchedCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val entitiesCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    memo.frame(s, ("directed_cbs", d, true))(
+      MetaBlocking.directedEdges(weightedCached(s, d, clean = true, WeightType.CBS)))
 
   /** The matched-pair set (er_match_edit rule: WNP(CBS, AVG, OR)
    * candidates at normalized Levenshtein >= 0.5), snapshot once per dir —
    * consumed by the matching query, entity clustering, and the golden
    * records. */
   def matchedPairs(s: SparkSession, d: String): DataFrame =
-    matchedCache.getOrElseUpdate(d, {
+    memo.frame(s, ("matched", d)) {
       val names = s.read.parquet(s"$d/part.parquet")
         .select(col("p_partkey"), lower(col("p_name")).as("nm"))
       val cand = wnpCbsAvgOrDirty(s, d).select("p1", "p2")
-      graft.util.Snapshot(cand
+      cand
         .join(names.select(col("p_partkey").as("p1"), col("nm").as("nm1")), "p1")
         .join(names.select(col("p_partkey").as("p2"), col("nm").as("nm2")), "p2")
         .withColumn("sim",
@@ -181,8 +150,8 @@ object ErQueries {
             greatest(length(col("nm1")), length(col("nm2"))).cast("double"))
         .filter(col("sim") >= 0.5)
         .select(col("p1"), col("p2"),
-          graft.functions.FastRound.round(col("sim"), 9).as("sim")))
-    })
+          graft.functions.FastRound.round(col("sim"), 9).as("sim"))
+    }
 
   /** Entity assignment: connected components (hash-min label propagation)
    * over the matched pairs — every profile tagged with the smallest
@@ -190,15 +159,12 @@ object ErQueries {
    * and the golden records both read it, and the CC iterations are the
    * cost. */
   def entities(s: SparkSession, d: String): DataFrame =
-    entitiesCache.getOrElseUpdate(d, graft.util.Snapshot(
+    memo.frame(s, ("entities", d))(
       graft.util.ConnectedComponents.minLabel(
         s.read.parquet(s"$d/part.parquet")
           .select(col("p_partkey").as("profile_id")).distinct(),
         matchedPairs(s, d), idCol = "profile_id", srcCol = "p1", dstCol = "p2",
-        labelCol = "entity_id")))
-
-  private val incrCappedCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        labelCol = "entity_id"))
 
   /** The capped (key, profile_id, is_new) union for the standard
    * 10%-batch split, snapshot once per dir — the base every incremental
@@ -207,24 +173,20 @@ object ErQueries {
    * the r6 pre-bench). The skew-purge drop count fires on the snapshot
    * build (metrics node `incremental_capped_keys`). */
   def incrCapped(s: SparkSession, d: String): DataFrame =
-    incrCappedCache.getOrElseUpdate(d, {
+    memo.frame(s, ("incr_capped", d)) {
       val attrs = partAttrs(s, d, twoSources = false)
-      graft.util.Snapshot(Blocking.cappedKeys(
+      Blocking.cappedKeys(
         Blocking.tokenKeys(attrs.filter(col("profile_id") % 10 =!= 0)),
         Blocking.tokenKeys(attrs.filter(col("profile_id") % 10 === 0)),
-        maxBlockSize = 1000L, metricName = "incremental_capped_keys"))
-    })
-
-  private val incrWnpCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+        maxBlockSize = 1000L, metricName = "incremental_capped_keys")
+    }
 
   /** The incremental WNP(CBS) retained set for the standard 10%-batch
    * split, snapshot once per dir: consumed by the pruning query AND the
    * end-to-end matching query (which otherwise re-derived the whole
    * capped-key self-join per run). */
   def incrementalWnpCbs(s: SparkSession, d: String): DataFrame =
-    incrWnpCache.getOrElseUpdate(d, graft.util.Snapshot(
-      Blocking.incrementalWnpFrom(incrCapped(s, d))))
+    memo.frame(s, ("incr_wnp", d))(Blocking.incrementalWnpFrom(incrCapped(s, d)))
 
   private def w9(df: DataFrame): DataFrame =
     df.select(col("p1"), col("p2"), graft.functions.FastRound.round(col("w1"), 9).as("w"))
@@ -242,19 +204,15 @@ object ErQueries {
       .select(concat(lit("P"), col("ka")).as("id1"), concat(lit("P"), col("kb")).as("id2"))
   }
 
-  private val gtCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** Converted ground truth, memoized: the p_name self-join is paid by
    * three different queries otherwise. */
   def gtConverted(spark: SparkSession, dir: String): DataFrame =
-    gtCache.getOrElseUpdate(dir, {
+    memo.frame(spark, ("gt_converted", dir)) {
       val profiles = spark.read.parquet(s"$dir/part.parquet")
         .select(col("p_partkey").as("profile_id"),
           concat(lit("P"), col("p_partkey")).as("original_id"))
-      graft.util.Snapshot(
-        Evaluation.convertGroundTruth(gtOriginal(spark, dir), profiles, profiles))
-    })
+      Evaluation.convertGroundTruth(gtOriginal(spark, dir), profiles, profiles)
+    }
 
   /** All ER queries, keyed as they appear in SparkEntry.queries. */
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -351,15 +309,15 @@ object ErQueries {
     // is snapshot before WNP: the pruning pass reads it twice (thresholds
     // + join), which would otherwise run the whole lazy pipeline twice.
     "er_wnp_cbs_3src" -> ((s, d) => {
-      val weighted = weighted3srcCache.getOrElseUpdate(d, {
+      val weighted = memo.frame(s, ("weighted_3src", d)) {
         val keys3 = Blocking.tokenKeys(partAttrs(s, d, twoSources = true, numSources = 3))
         val cb = Pipeline.cleanBlocks(keys3, clean = true, Smooth, FilterR,
           numSources = 3, stage = graft.util.Snapshot.apply)
-        graft.util.Snapshot(cb.weighted(WeightType.CBS))
-      })
+        cb.weighted(WeightType.CBS)
+      }
       // per-profile thresholds memoized like the weighted graph they
       // summarize (wnpThresholds posture); the pruning joins stay per-run
-      val th = wnpTh3srcMemo(s, d)(
+      val th = memo.frame(s, ("wnp_th_3src", d))(
         MetaBlocking.localThresholds(weighted, ThresholdType.AVG))
       MetaBlocking.wnp(weighted, ThresholdType.AVG, ComparisonType.OR, WeightType.CBS,
         thOpt = Some(th))
@@ -653,7 +611,7 @@ object ErQueries {
       // dp = Σ f1*f2 over shared tokens is an exact integer sum in either
       // shape (1e6 fixed-point longs, order-free), so sim_tfidf is
       // bit-identical to the join+sum form.
-      val vecs = tfidfWCache.getOrElseUpdate(d, {
+      val vecs = memo.frame(s, ("tfidf_vectors", d)) {
         val names = s.read.parquet(s"$d/part.parquet")
           .select(col("p_partkey").as("pid"), lower(col("p_name")).as("nm"))
         val n = names.count()
@@ -666,10 +624,10 @@ object ErQueries {
             graft.functions.FastRound.round(
               col("tf") * log(lit(n.toDouble) / col("df")) * 1e6, 0)
               .cast("long").as("f"))
-        graft.util.Snapshot(w.groupBy("pid").agg(
+        w.groupBy("pid").agg(
           map_from_entries(collect_list(struct(col("token"), col("f")))).as("v"),
-          sum(col("f") * col("f")).as("nrm2")))
-      })
+          sum(col("f") * col("f")).as("nrm2"))
+      }
       val cand = wnpCbsAvgOrDirty(s, d).select("p1", "p2")
       // SHUFFLE_HASH, not broadcast: the vector table is O(profiles) — it
       // GROWS with the corpus, and a size-estimate miss would make

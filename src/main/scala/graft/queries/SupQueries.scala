@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.er._
+import graft.util.Memo
 
 /**
  * Queries for supervised meta-blocking, progressive ER and attribute
@@ -11,72 +12,51 @@ import graft.er._
  */
 object SupQueries {
 
-  private val featCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val scoredCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val clustersCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  private val assignCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val attrEntCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** Shared frame artifacts, keyed by (artifact name, dir, parameters). */
+  private val memo = new Memo[Product, Memo.Frame]
 
   /** Cluster assignments (the LSH+CC chain) over the parity-split part
    * attrs, snapshot once per dir: attr_clusters and attr_clusters_norm
    * differ only in entropy normalization, so the expensive chain is
    * shared and each variant is a tiny join+aggregate on top. */
   def assigned(s: SparkSession, d: String): DataFrame =
-    assignCache.getOrElseUpdate(d,
-      graft.util.Snapshot(AttributeClustering.assignments(
-        ErQueries.partAttrs(s, d, twoSources = true), k = 16, bands = 4,
-        maxFactor = 0.8)))
+    memo.frame(s, ("assigned", d))(AttributeClustering.assignments(
+      ErQueries.partAttrs(s, d, twoSources = true), k = 16, bands = 4,
+      maxFactor = 0.8))
 
   /** Per-attribute raw entropy + totals, shared by both entropy variants. */
   def attrEntropies(s: SparkSession, d: String): DataFrame =
-    attrEntCache.getOrElseUpdate(d,
-      graft.util.Snapshot(AttributeClustering.attributeEntropy(
-        ErQueries.partAttrs(s, d, twoSources = true))))
+    memo.frame(s, ("attr_entropies", d))(AttributeClustering.attributeEntropy(
+      ErQueries.partAttrs(s, d, twoSources = true)))
 
   /** Attribute clusters over the parity-split part attrs, shared by
    * attr_clusters and blast_wnp. */
   def clusters(s: SparkSession, d: String): DataFrame =
-    clustersCache.getOrElseUpdate(d,
-      graft.util.Snapshot(AttributeClustering.withClusterEntropy(
-        assigned(s, d), attrEntropies(s, d))))
+    memo.frame(s, ("clusters", d))(AttributeClustering.withClusterEntropy(
+      assigned(s, d), attrEntropies(s, d)))
 
   /** Supervised-MB features over the dirty cleaned block collection,
    * labeled with the p_name ground truth. */
   def features(s: SparkSession, d: String): DataFrame =
-    featCache.getOrElseUpdate(d, {
+    memo.frame(s, ("features", d, false)) {
       val cb = ErQueries.cleaned(s, d, clean = false)
-      graft.util.Snapshot(SupervisedMB.features(cb.members2, cb.stats2, clean = false,
-        gt = Some(ErQueries.gtConverted(s, d)), stage = graft.util.Snapshot.apply))
-    })
+      SupervisedMB.features(cb.members2, cb.stats2, clean = false,
+        gt = Some(ErQueries.gtConverted(s, d)), stage = graft.util.Snapshot.apply)
+    }
 
   def scored(s: SparkSession, d: String): DataFrame =
-    scoredCache.getOrElseUpdate(d,
-      graft.util.Snapshot(SupervisedMB.deterministicScore(features(s, d))))
+    memo.frame(s, ("scored", d))(SupervisedMB.deterministicScore(features(s, d)))
 
   /** The GSPSN token-position index (global sort + dense numbering +
    * RDD-bridge round-trip — the expensive prefix of every gspsn
    * evaluation): a standing corpus structure, materialized once per
    * (dir, mode) like the PPJoin/LSH corpus indexes. Keys differ between
    * dirty and clean (source split), hence the mode-qualified memo key. */
-  private val gspsnPosMemo = new graft.util.PathMemo
   private def gspsnPos(s: SparkSession, d: String, clean: Boolean): DataFrame =
-    gspsnPosMemo(s, s"$d#clean=$clean")(
+    memo.frame(s, ("gspsn_positions", d, clean))(
       Progressive.tokenPositions(
         ErQueries.keys(s, d, twoSources = clean)
           .select("key", "profile_id", "source_id")))
-
-  private val positivesCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val keysNoDefaultCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val featCleanCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
   /** Classifier-positive edge set, materialized ONCE per dir: blast/cnp/rcnp
    * each read it 3-4 times, and r3 paid a full snapshot write+read round
@@ -85,40 +65,31 @@ object SupQueries {
    * those strategies consume (the 9 feature columns would triple the
    * snapshot for nothing). */
   def positives(s: SparkSession, d: String): DataFrame =
-    positivesCache.getOrElseUpdate(d,
-      graft.util.Snapshot(out(SupervisedMB.bcl(scored(s, d)))))
+    memo.frame(s, ("positives", d))(out(SupervisedMB.bcl(scored(s, d))))
 
   /** Clean-ER features, memoized like the dirty twin: both Verify and Bench
    * consume the full 9-feature pair scan, so compute it once. */
   def featuresClean(s: SparkSession, d: String): DataFrame =
-    featCleanCache.getOrElseUpdate(d, {
+    memo.frame(s, ("features", d, true)) {
       val cb = ErQueries.cleaned(s, d, clean = true)
-      graft.util.Snapshot(SupervisedMB.features(cb.members2, cb.stats2, clean = true,
-        gt = Some(ErQueries.gtConverted(s, d)), stage = graft.util.Snapshot.apply))
-    })
-
-  private val mlScoredCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+      SupervisedMB.features(cb.members2, cb.stats2, clean = true,
+        gt = Some(ErQueries.gtConverted(s, d)), stage = graft.util.Snapshot.apply)
+    }
 
   /** The reference's real workflow: LR trained on the labeled features,
    * pruning driven by its probabilities (Generalized Supervised
    * Meta-blocking notebook). LBFGS isn't bit-reproducible in SQL, so this
    * path gets a rows-only driver check, not a hash oracle. */
   def mlScored(s: SparkSession, d: String): DataFrame =
-    mlScoredCache.getOrElseUpdate(d,
-      graft.util.Snapshot(SupervisedMB.mlScore(features(s, d))))
+    memo.frame(s, ("ml_scored", d))(SupervisedMB.mlScore(features(s, d)))
 
   private def out(df: DataFrame): DataFrame =
     df.select("p1", "p2", "p_match", "is_match")
 
-  private val blastCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val blastThMemo = new graft.util.PathMemo
-
   /** The BLAST chi2+entropy weighted graph (cluster-qualified keys ->
    * cleaned blocks -> entropy-weighted chi2 pairs), snapshot once per dir. */
   def blastWeighted(s: SparkSession, d: String): DataFrame =
-    blastCache.getOrElseUpdate(d, {
+    memo.frame(s, ("blast_weighted", d)) {
       def t[A](name: String)(f: => A): A = {
         val t0 = System.nanoTime()
         val r = f
@@ -135,10 +106,9 @@ object SupQueries {
         .groupBy("key").agg(max(col("entropy")).as("entropy"))
       val pairsSnap = t("pairs")(graft.util.Snapshot(cbChk.pairs(Some(blockEnt))))
       val statsSnap = t("profile_stats")(graft.util.Snapshot(cbChk.profileStats))
-      t("weighted")(graft.util.Snapshot(MetaBlocking.weightedPairs(
-        pairsSnap, statsSnap, cbChk.numberOfBlocks,
-        WeightType.ChiSquare, useEntropy = true)))
-    })
+      MetaBlocking.weightedPairs(pairsSnap, statsSnap, cbChk.numberOfBlocks,
+        WeightType.ChiSquare, useEntropy = true)
+    }
 
   def all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sup_features" -> ((s, d) => features(s, d)),
@@ -253,15 +223,14 @@ object SupQueries {
     // dir: the whole LSH+CC attribute-clustering chain re-ran on every
     // call (8.9s steady at sf0.1 for a frame Verify+Bench read 3 times).
     "blast_keys_nodefault" -> ((s, d) =>
-      keysNoDefaultCache.getOrElseUpdate(d, {
+      memo.frame(s, ("keys_nodefault", d)) {
         val attrs2 = ErQueries.partAttrs(s, d, twoSources = true)
           .filter(!(col("source_id") === 1 && col("attribute") === "type"))
         val cl = AttributeClustering.clusterAttributes(attrs2, k = 16, bands = 4,
           maxFactor = 0.8, computeEntropy = true)
-        graft.util.Snapshot(
-          AttributeClustering.clusterKeys(attrs2, cl, excludeDefaultCluster = true)
-            .select("profile_id", "key").distinct())
-      })),
+        AttributeClustering.clusterKeys(attrs2, cl, excludeDefaultCluster = true)
+          .select("profile_id", "key").distinct()
+      }),
 
     // full BLAST-style pipeline: cluster-qualified keys -> cleaned blocks
     // -> chi2 WNP with entropy weighting
@@ -272,7 +241,7 @@ object SupQueries {
       // growth term (13x on 10x data); the pruning joins stay per-run
       MetaBlocking.wnp(blastWeighted(s, d), ThresholdType.MaxFract2, ComparisonType.OR,
         WeightType.ChiSquare, chi2divider = 2.0, eps = 1e-9,
-        thOpt = Some(blastThMemo(s, d)(MetaBlocking.localThresholds(
+        thOpt = Some(memo.frame(s, ("blast_th", d))(MetaBlocking.localThresholds(
           blastWeighted(s, d), ThresholdType.MaxFract2))))
         .select(col("p1"), col("p2"), graft.functions.FastRound.round(col("w"), 6).as("w")))
   )

@@ -8,6 +8,7 @@ import graft.dedup.Dedup
 import graft.similarity.Similarity
 import graft.streaming.EventStreams
 import graft.multimodal.Multimodal
+import graft.util.Memo
 
 /**
  * Training-data pipeline queries over `documents`, `embeddings`, `events`
@@ -20,85 +21,62 @@ object TrainQueries {
   private def docs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")
 
-  /** Path-keyed memo for per-dir materialized artifacts: caches the
-   * snapshot PATH, never a DataFrame — a DataFrame is bound to the
-   * session that planned it, so a second/restarted session in the same
-   * JVM reusing the dir would hold a plan over a possibly-stopped
-   * session (the EventStreams pattern; r8 ADVICE). Builders may call
-   * OTHER memos (computeIfAbsent re-entrance only deadlocks on the SAME
-   * map, and no builder touches its own). */
-  private final class PathMemo {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, String]
-    def apply(s: SparkSession, d: String)(build: => DataFrame): DataFrame =
-      s.read.parquet(m.computeIfAbsent(d, _ =>
-        graft.util.Snapshot.materialize(build)._1))
-  }
+  /** Shared frame artifacts, keyed by (artifact name, dir). */
+  private val memo = new Memo[Product, Memo.Frame]
 
   /** Shingle sets and simhash fingerprints are shared by several dedup
-   * queries in one Verify/Bench session — memoize + persist (same pattern
-   * as ErQueries.cleanedCache). */
-  private val shingleMemo = new PathMemo
-  private val simhashMemo = new PathMemo
-
+   * queries in one Verify/Bench session — memoize them. */
   private def shingles3(s: SparkSession, d: String): DataFrame =
-    shingleMemo(s, d)(Dedup.shingles(docs(s, d), n = 3))
+    memo.frame(s, ("shingle", d))(Dedup.shingles(docs(s, d), n = 3))
 
   private def simhashFp(s: SparkSession, d: String): DataFrame =
-    simhashMemo(s, d)(Dedup.simhash(docs(s, d)))
+    memo.frame(s, ("simhash", d))(Dedup.simhash(docs(s, d)))
 
   /** The standing PPJoin index (rarest-first sorted shingle arrays +
    * prefix lengths at t=0.5): built once per dir so the join query
    * measures probing, not index construction — the same materialize-once
    * posture as the streaming LSH corpus index. */
-  private val ppjoinMemo = new PathMemo
   private def ppjoinIdx(s: SparkSession, d: String): DataFrame =
-    ppjoinMemo(s, d)(Dedup.ppjoinIndex(shingles3(s, d), threshold = 0.5))
+    memo.frame(s, ("ppjoin", d))(Dedup.ppjoinIndex(shingles3(s, d), threshold = 0.5))
 
   /** Learned BPE merge table (6 rounds), shared by the merge dump and the
    * tokenizer stats query — learning is the cost, so memoize per dir. */
-  private val bpeMemo = new PathMemo
   private def bpeMerges(s: SparkSession, d: String): DataFrame =
-    bpeMemo(s, d)(graft.text.Bpe.learn(docs(s, d), nMerges = 6))
+    memo.frame(s, ("bpe", d))(graft.text.Bpe.learn(docs(s, d), nMerges = 6))
 
   /** The banded-SRP eps-graph at threshold 0.4, shared by the near-dup
    * pair query and DBSCAN (same matchedPairs-style memo: the graph is
    * the product, its consumers shouldn't each rebuild it). */
-  private val neardupMemo = new PathMemo
   private def neardupPairs(s: SparkSession, d: String): DataFrame =
-    neardupMemo(s, d)(Similarity.cosineNearDupPairs(embs(s, d), threshold = 0.4))
+    memo.frame(s, ("neardup", d))(Similarity.cosineNearDupPairs(embs(s, d), threshold = 0.4))
 
   /** Winnowing fingerprints shared by the dump and the matching queries. */
-  private val winnowMemo = new PathMemo
   private def winnowFp(s: SparkSession, d: String): DataFrame =
-    winnowMemo(s, d)(TextAnalysis.winnow(docs(s, d)))
+    memo.frame(s, ("winnow", d))(TextAnalysis.winnow(docs(s, d)))
 
   /** Trained k-means centroids (k=8, 2 Lloyd iterations) shared by the
    * assignment query and the IVF-with-kmeans query; k rows — the
    * materialization is negligible next to the training it avoids. */
-  private val kmeansMemo = new PathMemo
   private def kmeansCentroids(s: SparkSession, d: String): DataFrame =
-    kmeansMemo(s, d)(graft.similarity.KMeans.centroids(embs(s, d), k = 8, iters = 2))
+    memo.frame(s, ("kmeans", d))(graft.similarity.KMeans.centroids(embs(s, d), k = 8, iters = 2))
 
-  /** Char-level ExactSubstr duplicate spans (L=30), path-cached once per
+  /** Char-level ExactSubstr duplicate spans (L=30), memoized once per
    * dir — shared by the span dump and the apply stage (the spans ARE the
    * product; the apply must not re-elect canonicals). */
-  private val substrSpansMemo = new PathMemo
   private def substrSpans(s: SparkSession, d: String): DataFrame =
-    substrSpansMemo(s, d)(graft.text.Curation.substrDupSpans(docs(s, d), L = 30))
+    memo.frame(s, ("substr_spans", d))(graft.text.Curation.substrDupSpans(docs(s, d), L = 30))
 
-  /** Token-level ExactSubstr duplicate spans (L=10), path-cached once per
+  /** Token-level ExactSubstr duplicate spans (L=10), memoized once per
    * dir — same sharing as [[substrSpans]] for the token-window twin. */
-  private val tokSpansMemo = new PathMemo
   private def tokSpans(s: SparkSession, d: String): DataFrame =
-    tokSpansMemo(s, d)(graft.text.Curation.dupSpans(docs(s, d), L = 10))
+    memo.frame(s, ("tok_spans", d))(graft.text.Curation.dupSpans(docs(s, d), L = 10))
 
   /** dHash fingerprints of the PPM image corpus (real P6 fixtures +
    * planted perturbed twins at doc_id + 1e7), decoded by the REAL PPM
    * parser; and the banded Hamming near-dup pairs over them — the dump,
    * pair, and recall queries all consume them. */
-  private val dhashMemo = new PathMemo
   private def dhashes(s: SparkSession, d: String): DataFrame =
-    dhashMemo(s, d) {
+    memo.frame(s, ("dhash", d)) {
       import s.implicits._
       val ids = docs(s, d).select("doc_id").as[Long]
       val base = ids.map(id => (id, Multimodal.ppmDhashFixture(id)))
@@ -108,9 +86,8 @@ object TrainQueries {
         base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
         decoder = Multimodal.decodePpmDhash, schema = Multimodal.DhashSchema)
     }
-  private val mmPairsMemo = new PathMemo
   private def mmNeardup(s: SparkSession, d: String): DataFrame =
-    mmPairsMemo(s, d)(Multimodal.dhashNearDupPairs(dhashes(s, d), maxDist = 6,
+    memo.frame(s, ("mm_pairs", d))(Multimodal.dhashNearDupPairs(dhashes(s, d), maxDist = 6,
       materialized = true))
 
   /** dHash fingerprints through the REAL JPEG codec (javax.imageio):
@@ -118,9 +95,8 @@ object TrainQueries {
    * decoded dHash bit-equal to the closed form, + planted twins that are
    * TRUE re-encodes (decode -> encode again at q75 — the "same image
    * saved by another site" duplicate). Shared by dump, pairs, recall. */
-  private val jpegDhashMemo = new PathMemo
   private def jpegDhashes(s: SparkSession, d: String): DataFrame =
-    jpegDhashMemo(s, d) {
+    memo.frame(s, ("jpeg_dhash", d)) {
       import s.implicits._
       val ids = docs(s, d).select("doc_id").as[Long]
       val base = ids.map(id => (id, Multimodal.jpegFixture(id)))
@@ -130,17 +106,15 @@ object TrainQueries {
         base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
         decoder = Multimodal.decodeJpegDhash, schema = Multimodal.DhashSchema)
     }
-  private val jpegPairsMemo = new PathMemo
   private def jpegNeardup(s: SparkSession, d: String): DataFrame =
-    jpegPairsMemo(s, d)(Multimodal.dhashNearDupPairs(jpegDhashes(s, d), maxDist = 6,
+    memo.frame(s, ("jpeg_pairs", d))(Multimodal.dhashNearDupPairs(jpegDhashes(s, d), maxDist = 6,
       materialized = true))
 
   /** Audio envelope fingerprints of the WAV corpus (real RIFF fixtures +
    * planted noise twins at doc_id + 1e7) and their banded Hamming pairs —
    * the audio siblings of [[dhashes]]/[[mmNeardup]]. */
-  private val afpMemo = new PathMemo
   private def afps(s: SparkSession, d: String): DataFrame =
-    afpMemo(s, d) {
+    memo.frame(s, ("afp", d)) {
       import s.implicits._
       val ids = docs(s, d).select("doc_id").as[Long]
       val base = ids.map(id => (id, Multimodal.wavFpFixture(id)))
@@ -150,9 +124,8 @@ object TrainQueries {
         base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
         decoder = Multimodal.decodeWavAfp, schema = Multimodal.AudioFpSchema)
     }
-  private val afpPairsMemo = new PathMemo
   private def afpNeardup(s: SparkSession, d: String): DataFrame =
-    afpPairsMemo(s, d)(Multimodal.afpNearDupPairs(afps(s, d), maxDist = 6,
+    memo.frame(s, ("afp_pairs", d))(Multimodal.afpNearDupPairs(afps(s, d), maxDist = 6,
       materialized = true))
 
   /** Spectral (Haitsma–Kalker-shaped) fingerprints of the WAV corpus +
@@ -169,14 +142,12 @@ object TrainQueries {
       Multimodal.reencodeWav(id, Multimodal.wavFpFixture(id))))
     base.union(twins).toDF("doc_id", "payload")
   }
-  private val sfpMemo = new PathMemo
   private def sfps(s: SparkSession, d: String): DataFrame =
-    sfpMemo(s, d)(Multimodal.decodeFeatures(
+    memo.frame(s, ("sfp", d))(Multimodal.decodeFeatures(
       wavReencPayloads(s, d), parallelism = 8,
       decoder = Multimodal.decodeWavSfp, schema = Multimodal.SpectralFpSchema))
-  private val afpReencMemo = new PathMemo
   private def afpsReenc(s: SparkSession, d: String): DataFrame =
-    afpReencMemo(s, d)(Multimodal.decodeFeatures(
+    memo.frame(s, ("afp_reenc", d))(Multimodal.decodeFeatures(
       wavReencPayloads(s, d), parallelism = 8,
       decoder = Multimodal.decodeWavAfp, schema = Multimodal.AudioFpSchema))
 
@@ -184,13 +155,11 @@ object TrainQueries {
    * once per dir — shared by their dump queries, the recall metric, and
    * the cluster chain (the pair graphs are the product; consumers must
    * not each rebuild them). */
-  private val jacPairsMemo = new PathMemo
   private def jaccardPairs05(s: SparkSession, d: String): DataFrame =
-    jacPairsMemo(s, d)(Dedup.jaccardPairs(shingles3(s, d), threshold = 0.5,
+    memo.frame(s, ("jac_pairs", d))(Dedup.jaccardPairs(shingles3(s, d), threshold = 0.5,
       materialized = true))
-  private val lshPairsMemo = new PathMemo
   private def lshPairs(s: SparkSession, d: String): DataFrame =
-    lshPairsMemo(s, d)(Dedup.minhashLsh(shingles3(s, d), k = 16, bands = 4))
+    memo.frame(s, ("lsh_pairs", d))(Dedup.minhashLsh(shingles3(s, d), k = 16, bands = 4))
 
   /** Exact-dedup representative assignment (hash-groupBy election +
    * join-back), snapshot once per dir: the dump query, the curation
@@ -198,16 +167,14 @@ object TrainQueries {
    * artifact, and before this memo each re-ran the hash projection +
    * election (three sites paying ~0.4s each at sf0.1 — the r9 verdict's
    * measured cost of the window->agg scale-safety rewrite). */
-  private val exactMemo = new PathMemo
   private def exactReps(s: SparkSession, d: String): DataFrame =
-    exactMemo(s, d)(Dedup.exact(docs(s, d)))
+    memo.frame(s, ("exact", d))(Dedup.exact(docs(s, d)))
 
   /** Dedup cluster assignment (MinHash-LSH near-dup graph -> hash-min CC),
    * snapshot ONCE per dir: both the clusters query and the cluster-aware
    * split consume it, and the CC iterations are the expensive part. */
-  private val clustersMemo = new PathMemo
   private def clusters3(s: SparkSession, d: String): DataFrame =
-    clustersMemo(s, d)(Dedup.clusters(docs(s, d),
+    memo.frame(s, ("clusters", d))(Dedup.clusters(docs(s, d),
       lshPairs(s, d).select("d1", "d2")))
 
   /** Planted-twin embedding union + its trained coarse quantizer for the
@@ -218,22 +185,19 @@ object TrainQueries {
     e.unionByName(Similarity.plantNearDups(e, every = 20,
       idOffset = 10000000L, eps = 0.01))
   }
-  private val semCentMemo = new PathMemo
   private def semCentroids(s: SparkSession, d: String): DataFrame =
-    semCentMemo(s, d)(
+    memo.frame(s, ("sem_cent", d))(
       graft.similarity.KMeans.centroids(semUnion(s, d), k = 8, iters = 2))
 
   /** PQ codebooks (4 subspaces x 16 dims, k=8, 2 Lloyd iterations) and
    * the encoded code table, shared by the code-dump and ADC queries —
    * the code table is the PQ "index" a 100 TB deployment materializes
    * once and scans instead of the raw vectors. */
-  private val pqBooksMemo = new PathMemo
   private def pqBooks(s: SparkSession, d: String): DataFrame =
-    pqBooksMemo(s, d)(graft.similarity.ProductQuantization.codebooks(
+    memo.frame(s, ("pq_books", d))(graft.similarity.ProductQuantization.codebooks(
       embs(s, d), m = 4, subDim = 16, k = 8, iters = 2))
-  private val pqIndexMemo = new PathMemo
   private def pqIndex(s: SparkSession, d: String): DataFrame =
-    pqIndexMemo(s, d)(graft.similarity.ProductQuantization.encode(
+    memo.frame(s, ("pq_index", d))(graft.similarity.ProductQuantization.encode(
       embs(s, d), pqBooks(s, d), m = 4, subDim = 16))
 
   /** Pre-builds the memoized caches, exposed as INDEPENDENT chains so

@@ -28,13 +28,7 @@ import org.apache.spark.sql.functions.col
 object Bucketed {
   val NumBuckets = 8
 
-  // computeIfAbsent, NOT TrieMap.getOrElseUpdate: the latter may run the
-  // side-effecting block in TWO racing threads (last write wins), which
-  // here would mean concurrent DROP TABLE + overwrite-saveAsTable against
-  // one external path — ConcurrentHashMap guarantees the layout write
-  // executes at most once per key, and racers block until it finishes
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Unit]()
+  private val registered = new graft.util.Memo[(SparkSession, String, String), Unit]
 
   /** Bucketed view of `dir/name.parquet`, hash-bucketed and sorted on
    * `key`. First call per (session, dir, name) writes the layout; safe
@@ -42,7 +36,7 @@ object Bucketed {
   def table(s: SparkSession, dir: String, name: String, key: String): DataFrame = {
     val tag = Integer.toHexString(dir.hashCode & 0x7fffffff)
     val tbl = s"graft_${name}_b$tag"
-    registered.computeIfAbsent((s, dir, tbl), { _ =>
+    registered((s, dir, tbl)) {
       // one file per bucket: pre-partition on the bucket key (same
       // Murmur3 hash the bucket spec uses) so each writer task emits
       // exactly its own bucket file, and the sorted-bucket scan can
@@ -68,7 +62,7 @@ object Bucketed {
         .bucketBy(NumBuckets, key).sortBy(key)
         .option("path", path)
         .mode("overwrite").saveAsTable(tbl)
-    })
+    }
     s.table(tbl)
   }
 }

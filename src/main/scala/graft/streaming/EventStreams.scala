@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.util.Memo
 
 /**
  * Structured Streaming surface over the `events` table. The reference has
@@ -39,8 +40,8 @@ object EventStreams {
    * the drain harness. A production deployment sizes this to its state
    * volume; the conf is the knob.
    */
-  private val streamSessionCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Option[String]), SparkSession]
+  private val streamSessions =
+    new Memo[(org.apache.spark.SparkContext, String, Option[String]), SparkSession]
 
   private def streamSession(spark: SparkSession): SparkSession = {
     // ONE cached clone per (SparkContext, conf combo): building a fresh
@@ -53,13 +54,13 @@ object EventStreams {
     // streaming queries are independent, so sharing a session is safe.
     val n = spark.conf.getOption("spark.graft.stream.partitions").getOrElse("8")
     val mft = spark.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
-    streamSessionCache.computeIfAbsent((spark.sparkContext, n, mft), _ => {
+    streamSessions((spark.sparkContext, n, mft)) {
       val s = spark.newSession()
       s.conf.set("spark.sql.shuffle.partitions", n)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       mft.foreach(v => s.conf.set("spark.graft.stream.maxFilesPerTrigger", v))
       s
-    })
+    }
   }
 
   /** Parquet schema per table path, cached after the first read: every
@@ -67,10 +68,15 @@ object EventStreams {
    * re-inferring it per run re-lists the directory and re-reads a footer
    * on the driver. Pure metadata — the driver's tables are immutable for
    * a session, and nothing about query RESULTS is cached here. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  private val schemas = new Memo[String, org.apache.spark.sql.types.StructType]
   private def tableSchema(spark: SparkSession, path: String) =
-    schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    schemas(path)(spark.read.parquet(path).schema)
+
+  /** Standing corpus indexes and trained models of the streaming gates,
+   * keyed by (artifact name, dir, parameters). Each is a property of the
+   * standing tables, built once and re-read by every cloned streaming
+   * session (see [[graft.util.Memo]]). */
+  private val indexes = new Memo[Product, Memo.Frame]
 
   /** Streaming parquet reader honoring the source-rate knob
    * (`spark.graft.stream.maxFilesPerTrigger`): bounding files-per-batch
@@ -296,23 +302,16 @@ object EventStreams {
     drainAvailableNow(keys, "er_tokens_stream", "append")
   }
 
-  /** Materialized path of the standing corpus blocking-key index for the
-   * streaming incremental-ER gate, built once per dir: the corpus's token
-   * keys with oversized blocks purged AT INDEX TIME (keys spanning more
-   * than `maxBlockSize` corpus profiles are excluded — the purge count is
-   * observable via the `incremental_stream_cap` metrics node on the index
-   * build). Path-cached like [[lshIdxPath]] so cloned streaming sessions
-   * re-read one materialization. */
-  private val incrIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** The pre-capped standing key index (key, corpus_id) for `dir`. */
+  /** The pre-capped standing key index (key, corpus_id) for `dir`, the
+   * static side of the streaming incremental-ER gate, built once per dir:
+   * the corpus's token keys with oversized blocks purged AT INDEX TIME
+   * (keys spanning more than `maxBlockSize` corpus profiles are excluded —
+   * the purge count is observable via the `incremental_stream_cap`
+   * metrics node on the index build). */
   def incrementalCorpusIndex(spark: SparkSession, dir: String,
                              attrsOf: DataFrame => DataFrame,
-                             maxBlockSize: Long = 1000L): DataFrame = {
-    // computeIfAbsent, not getOrElseUpdate: TrieMap's getOrElseUpdate may
-    // run the side-effecting build twice under concurrent first drains.
-    val path = incrIdxPath.computeIfAbsent(dir, _ => {
+                             maxBlockSize: Long = 1000L): DataFrame =
+    indexes.frame(spark, ("incremental_corpus", dir)) {
       // snapshot: the count aggregate and the join probe are two
       // independent subtrees — unmaterialized, each would re-run the
       // scan + tokenization (the Dedup.jaccardPairs discipline)
@@ -323,15 +322,12 @@ object EventStreams {
       // partials + AQE-skew-splittable join; see Dedup.jaccardPairs)
       val base = keys.select("key", "profile_id")
       val blockSizes = base.groupBy("key").agg(count(lit(1)).as("_n"))
-      val capped = graft.util.CapMetrics.observeDrops(
+      graft.util.CapMetrics.observeDrops(
           base.join(blockSizes, Seq("key")),
           "incremental_stream_cap", col("_n") > maxBlockSize)
         .filter(col("_n") <= maxBlockSize)
         .select(col("key"), col("profile_id").as("corpus_id"))
-      graft.util.Snapshot.materialize(capped)._1
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   /**
    * Streaming INCREMENTAL ER — the [[graft.er.Blocking.incrementalPairs]]
@@ -398,28 +394,18 @@ object EventStreams {
    * band-key join, which is the DuckDB oracle.
    */
 
-  /** Materialized path of the standing corpus LSH band index, built ONCE
-   * per source dir — the production posture: the index over the standing
-   * 90% is a maintained artifact the ingest gate probes, not something
-   * recomputed from text on every micro-batch (r5's bench measured index
-   * rebuild, not ingest). Cached as a PATH, not a DataFrame: each
-   * streaming run clones the session, and re-reading the parquet path
-   * from the current clone is the clean way to share one materialization
-   * across sessions. */
-  private val lshIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** The standing corpus band index (band, band_val, corpus_id) for `dir`,
-   * materialized on first use. [[graft.queries.Warmup]] calls this so the
-   * first benched ingest doesn't pay index construction. */
-  def lshCorpusIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = lshIdxPath.computeIfAbsent(dir, _ =>
-      graft.util.Snapshot.materialize(
-        graft.dedup.Dedup.minhashBandKeys(
-            spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 10 =!= 0))
-          .select(col("band"), col("band_val"), col("doc_id").as("corpus_id")))._1)
-    spark.read.parquet(path)
-  }
+  /** The standing corpus LSH band index (band, band_val, corpus_id) for
+   * `dir`, built ONCE per source dir — the production posture: the index
+   * over the standing 90% is a maintained artifact the ingest gate
+   * probes, not something recomputed from text on every micro-batch (r5's
+   * bench measured index rebuild, not ingest). [[graft.queries.Warmup]]
+   * calls this so the first benched ingest doesn't pay index
+   * construction. */
+  def lshCorpusIndex(spark: SparkSession, dir: String): DataFrame =
+    indexes.frame(spark, ("lsh_corpus", dir))(
+      graft.dedup.Dedup.minhashBandKeys(
+          spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 10 =!= 0))
+        .select(col("band"), col("band_val"), col("doc_id").as("corpus_id")))
 
   /**
    * Streaming PQ encode — new embedding vectors (vec_id % 10 == 0, the
@@ -448,22 +434,16 @@ object EventStreams {
     drainAvailableNow(codes, "ann_pq_stream", "append")
   }
 
-  private val deconIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Standing benchmark gram index (distinct 10-token window texts of the
    * doc_id % 50 == 0 held-out docs), materialized once per dir — the
    * static side of the streaming span-decontamination gate. */
-  def deconGramIndex(spark: SparkSession, dir: String, L: Int = 10): DataFrame = {
-    val path = deconIdxPath.computeIfAbsent(dir, _ =>
-      graft.util.Snapshot.materialize(
-        graft.text.Curation.slidingGrams(
-            graft.text.Curation.tokenArr(
-              spark.read.parquet(s"$dir/documents.parquet")
-                .filter(col("doc_id") % 50 === 0), "text", "doc_id"), L)
-          .select("gram").distinct())._1)
-    spark.read.parquet(path)
-  }
+  def deconGramIndex(spark: SparkSession, dir: String, L: Int = 10): DataFrame =
+    indexes.frame(spark, ("decon_grams", dir, L))(
+      graft.text.Curation.slidingGrams(
+          graft.text.Curation.tokenArr(
+            spark.read.parquet(s"$dir/documents.parquet")
+              .filter(col("doc_id") % 50 === 0), "text", "doc_id"), L)
+        .select("gram").distinct())
 
   /**
    * Streaming span-decontamination ingest: corpus documents arrive as
@@ -494,21 +474,17 @@ object EventStreams {
       drainAvailableNow(marked, "txt_decon_spans_stream", "append"), L)
   }
 
-  private val substrIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Standing repeated-window index for the streaming ExactSubstr gate:
    * the DISTINCT L-char window strings occurring >= 2 times anywhere in
    * the standing corpus, stored WITH their 64-bit digests and
-   * materialized once per dir (computeIfAbsent path cache — the
-   * deconGramIndex pattern). The digests drive the scan-speed probe; the
-   * strings make the gate EXACT (a digest collision nominates, never
-   * marks). Index volume is bounded by the corpus' repeated content —
+   * materialized once per dir (the deconGramIndex pattern). The digests
+   * drive the scan-speed probe; the strings make the gate EXACT (a digest
+   * collision nominates, never marks). Index volume is bounded by the corpus' repeated content —
    * the few-% duplicated tail, never the corpus itself — and the build
    * is the batch operator's own hash-first shape: the full occurrence
    * stream carries (doc_id, pos, h) only. */
-  def substrRepeatedIndex(spark: SparkSession, dir: String, L: Int = 30): DataFrame = {
-    val path = substrIdxPath.computeIfAbsent(dir, _ => {
+  def substrRepeatedIndex(spark: SparkSession, dir: String, L: Int = 30): DataFrame =
+    indexes.frame(spark, ("substr_repeated", dir, L)) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val occ = graft.text.Curation.substrOcc(docs, L, "text", "doc_id")._2
       val dupH = occ.groupBy("h").agg(count(lit(1)).as("_hc"))
@@ -517,12 +493,9 @@ object EventStreams {
         .join(docs.select(col("doc_id"), col("text").as("_t")), Seq("doc_id"))
         .select(col("h"),
           col("_t").substr((col("pos") + 1).cast("int"), lit(L)).as("s"))
-      val idx = cand.groupBy("h", "s").agg(count(lit(1)).as("_c"))
+      cand.groupBy("h", "s").agg(count(lit(1)).as("_c"))
         .filter(col("_c") >= 2).select("h", "s")
-      graft.util.Snapshot.materialize(idx)._1
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   /**
    * Streaming ExactSubstr gate — the char-level twin of
@@ -581,19 +554,15 @@ object EventStreams {
    * AvailableNow batch equals the batch gate
    * ([[graft.text.Curation.qualityGate]]), which is the DuckDB twin.
    */
-  private val qgateThresholdPath =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]
-
   def qualityGateStreaming(spark0: SparkSession, dir: String,
                            p: Double = 0.25): DataFrame = {
     val spark = streamSession(spark0)
     // the trained artifact is a property of the STANDING corpus — train
-    // once per (dir, p) and path-cache the snapshot (the dedup_lsh_stream
+    // once per (dir, p) and memoize the snapshot (the dedup_lsh_stream
     // pattern), so each drain pays scoring + join, not re-training
-    val thPath = qgateThresholdPath.computeIfAbsent((dir, p), _ =>
-      graft.util.Snapshot.materialize(graft.text.Curation.qualityThresholds(
-        spark.read.parquet(s"$dir/documents.parquet"), p))._1)
-    val th = spark.read.parquet(thPath)
+    val th = indexes.frame(spark, ("quality_thresholds", dir, p))(
+      graft.text.Curation.qualityThresholds(
+        spark.read.parquet(s"$dir/documents.parquet"), p))
     val stream = reader(spark, tableSchema(spark, s"$dir/documents.parquet"))
       .parquet(streamDirFor(dir, "docs_qgate_", "documents.parquet"))
     drainAvailableNow(
@@ -604,7 +573,7 @@ object EventStreams {
   /**
    * Deployment shape of DSIR selection: the 256-bucket log-ratio model
    * is TRAINED once on the standing corpus
-   * ([[graft.text.Curation.dsirLogRatios]], path-cached like the quality
+   * ([[graft.text.Curation.dsirLogRatios]], memoized like the quality
    * gate), then folded into a ONE-ROW map column so incoming documents
    * score STATELESSLY — the per-doc weight is a row-local
    * `aggregate(toks, ...)` over the broadcast map, no token explode, no
@@ -619,19 +588,16 @@ object EventStreams {
    * the two differ by that grouping).
    */
   private val DsirBuckets = 256
-  private val dsirModelPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
 
   def dsirGateStreaming(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
-    val lrPath = dsirModelPath.computeIfAbsent(dir, _ => {
+    val lr = indexes.frame(spark, ("dsir_log_ratios", dir)) {
       val standing = spark.read.parquet(s"$dir/documents.parquet")
-      graft.util.Snapshot.materialize(graft.text.Curation.dsirLogRatios(
+      graft.text.Curation.dsirLogRatios(
         standing.filter(col("source") =!= "src1"),
-        standing.filter(col("source") === "src1"), buckets = DsirBuckets))._1
-    })
-    val model = spark.read.parquet(lrPath)
-      .agg(map_from_entries(collect_list(
+        standing.filter(col("source") === "src1"), buckets = DsirBuckets)
+    }
+    val model = lr.agg(map_from_entries(collect_list(
         struct(col("bucket"), col("lr_g")))).as("lr_m"))
     val stream = reader(spark, tableSchema(spark, s"$dir/documents.parquet"))
       .parquet(streamDirFor(dir, "docs_dsir_", "documents.parquet"))
@@ -649,15 +615,12 @@ object EventStreams {
     drainAvailableNow(scored, "txt_dsir_stream", "append")
   }
 
-  private val dhashIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Standing banded dHash index of the BASE image corpus (4×16-bit band
    * keys per image, the simhash-banding layout), materialized once per
    * dir — the static side of the streaming image-ingest gate. Built
    * through the REAL PPM decoder over the fixture corpus. */
-  def dhashCorpusIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = dhashIdxPath.computeIfAbsent(dir, _ => {
+  def dhashCorpusIndex(spark: SparkSession, dir: String): DataFrame =
+    indexes.frame(spark, ("dhash_corpus", dir)) {
       import spark.implicits._
       val ids = spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id").as[Long]
@@ -667,15 +630,12 @@ object EventStreams {
         parallelism = 8,
         decoder = graft.multimodal.Multimodal.decodePpmDhash,
         schema = graft.multimodal.Multimodal.DhashSchema)
-      val banded = fp.select(col("doc_id").as("corpus_id"),
+      fp.select(col("doc_id").as("corpus_id"),
           col("dhash").as("corpus_hash"),
           explode(sequence(lit(0), lit(3))).as("band"))
         .withColumn("band_val",
           expr("shiftright(corpus_hash, cast(band * 16 as int)) & 65535"))
-      graft.util.Snapshot.materialize(banded)._1
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   /**
    * Streaming image-ingest near-dup gate — the visual twin of
@@ -719,16 +679,13 @@ object EventStreams {
     drainAvailableNow(pairs, "mm_neardup_stream", "append")
   }
 
-  private val afpIdxPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Standing banded audio-fingerprint index of the BASE WAV corpus
    * (4×16-bit band keys per clip, the simhash-banding layout),
    * materialized once per dir — the static side of the streaming
    * audio-ingest gate. Built through the REAL RIFF/PCM16 parser over
    * the fixture corpus; the audio sibling of [[dhashCorpusIndex]]. */
-  def afpCorpusIndex(spark: SparkSession, dir: String): DataFrame = {
-    val path = afpIdxPath.computeIfAbsent(dir, _ => {
+  def afpCorpusIndex(spark: SparkSession, dir: String): DataFrame =
+    indexes.frame(spark, ("afp_corpus", dir)) {
       import spark.implicits._
       val ids = spark.read.parquet(s"$dir/documents.parquet")
         .select("doc_id").as[Long]
@@ -738,15 +695,12 @@ object EventStreams {
         parallelism = 8,
         decoder = graft.multimodal.Multimodal.decodeWavAfp,
         schema = graft.multimodal.Multimodal.AudioFpSchema)
-      val banded = fp.select(col("doc_id").as("corpus_id"),
+      fp.select(col("doc_id").as("corpus_id"),
           col("afp").as("corpus_hash"),
           explode(sequence(lit(0), lit(3))).as("band"))
         .withColumn("band_val",
           expr("shiftright(corpus_hash, cast(band * 16 as int)) & 65535"))
-      graft.util.Snapshot.materialize(banded)._1
-    })
-    spark.read.parquet(path)
-  }
+    }
 
   /**
    * Streaming audio-ingest near-dup gate — completes batch/stream
@@ -883,8 +837,7 @@ object EventStreams {
    * user is filtered from the output. Emitted sessions match the batch
    * gaps-and-islands twin [[sessionize]] row for row.
    */
-  private val sessMaxTsUs =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]
+  private val sessMaxTsUs = new Memo[String, Option[Long]]
 
   def sessionizeStreaming(spark0: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
     val spark = streamSession(spark0)
@@ -895,12 +848,12 @@ object EventStreams {
     // max real event time — a scalar property of the STANDING table,
     // computed once per dir (a production deploy would just pick a
     // watermark delay and let late sessions flush continuously)
-    val maxOpt = sessMaxTsUs.computeIfAbsent(dir, _ => {
+    val maxOpt = sessMaxTsUs(dir) {
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val tsUs = if (tsIsLong) expr("ts div 1000") else unix_micros(col("ts"))
       val r = raw.select(max(tsUs)).head()
       if (r.isNullAt(0)) None else Some(r.getLong(0))
-    })
+    }
     if (maxOpt.isEmpty)
       // zero events: no sessions — the batch twin's (empty) result, same schema
       return sessionize(loadEvents(spark, dir), gapMinutes)
@@ -1124,19 +1077,14 @@ object EventStreams {
    * broadcast join, so no state store at all and the stream scores at
    * projection speed. Draining the whole file equals the batch twin.
    */
-  private val zscoreStatsPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   def zscoreStreaming(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
     // the trained artifact is a property of the STANDING corpus — train
-    // once per dir and path-cache the snapshot (the qualityGateStreaming
+    // once per dir and memoize the snapshot (the qualityGateStreaming
     // posture), so each drain pays scoring + broadcast join, not
     // re-deriving the per-type moments batch aggregate
-    val stPath = zscoreStatsPath.computeIfAbsent(dir, _ =>
-      graft.util.Snapshot.materialize(
-        zscoreStats(spark.read.parquet(s"$dir/events.parquet")))._1)
-    val stats = spark.read.parquet(stPath)
+    val stats = indexes.frame(spark, ("zscore_stats", dir))(
+      zscoreStats(spark.read.parquet(s"$dir/events.parquet")))
     val schema = tableSchema(spark, s"$dir/events.parquet")
     val stream = reader(spark, schema)
       .parquet(streamDirFor(dir, "events_zscore_"))
@@ -1242,9 +1190,6 @@ object EventStreams {
    * foreachBatch output lands as parquet appends (exactly-once per batch
    * via the sink's idempotent overwrite-by-batch-id directory layout).
    */
-  private val asofClicksPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   def asofStreaming(spark0: SparkSession, dir: String): DataFrame = {
     val spark = streamSession(spark0)
     val schema = tableSchema(spark, s"$dir/events.parquet")
@@ -1258,12 +1203,10 @@ object EventStreams {
     // the click side is the STANDING reference table the gate enriches
     // against — materialize it once per dir (the lshCorpusIndex posture)
     // instead of re-writing the same filtered projection every drain
-    val clicksPath = asofClicksPath.computeIfAbsent(dir, _ =>
-      graft.util.Snapshot.materialize(loadEvents(spark, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_uid"), col("ts").as("c_ts"),
-          col("event_id").as("c_id")))._1)
-    val clicks = spark.read.parquet(clicksPath)
+    val clicks = indexes.frame(spark, ("asof_clicks", dir))(loadEvents(spark, dir)
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as("c_uid"), col("ts").as("c_ts"),
+        col("event_id").as("c_id")))
     val base = spark.conf.getOption("spark.local.dir")
       .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
       .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))

@@ -80,9 +80,8 @@ object Snapshot {
   }
 
   /** Like [[apply]], also returning the written path — for callers that
-   * cache the MATERIALIZATION across sessions (e.g. a standing index
-   * probed by per-query cloned streaming sessions, where re-reading the
-   * path from the current session is the clean way to share it). */
+   * share the MATERIALIZATION across sessions by re-reading the path from
+   * the current session ([[Memo]]). */
   def materialize(df: DataFrame): (String, DataFrame) = {
     val spark = df.sparkSession
     val explicit = spark.conf.getOption("spark.graft.checkpoint.dir")

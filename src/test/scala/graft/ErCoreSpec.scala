@@ -19,6 +19,37 @@ object TestSpark {
     // naive parquet timestamps read as TIMESTAMP, not NTZ (see Verify)
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .getOrCreate()
+
+  /** Spark jobs started while `body` runs, counted with a SparkListener. */
+  def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    // the listener bus is asynchronous but ordered: once a marker job's
+    // start has arrived, every job started before it has been counted
+    def mark(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains(tag) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(started.contains(tag), s"marker job $tag never reached the listener")
+    }
+    val tag = s"jobs-${System.nanoTime()}"
+    sc.addSparkListener(listener)
+    try {
+      mark(s"$tag-begin")
+      body
+      mark(s"$tag-end")
+    } finally sc.removeSparkListener(listener)
+    val seen = started.toArray(Array.empty[String]).toSeq
+    seen.indexOf(s"$tag-end") - seen.indexOf(s"$tag-begin") - 1
+  }
 }
 
 class ErCoreSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -604,35 +604,11 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("Snapshot runs one Spark job, the write: no schema-inference job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        started.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    // the listener bus is asynchronous but ordered: once a marker job's
-    // start has arrived, every job started before it has been counted
-    def mark(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!started.contains(tag) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(started.contains(tag), s"marker job $tag never reached the listener")
-    }
-    sc.addSparkListener(listener)
-    try {
-      mark("snapshot-jobs-begin")
-      graft.util.Snapshot(Seq((1L, "a")).toDF("k", "v")) // one partition
-      mark("snapshot-jobs-end")
-    } finally sc.removeSparkListener(listener)
-    val seen = started.toArray(Array.empty[String]).toSeq
-    val between = seen.slice(seen.indexOf("snapshot-jobs-begin") + 1,
-      seen.indexOf("snapshot-jobs-end"))
-    assert(between.size == 1, s"Snapshot started ${between.size} jobs")
+    val jobs = TestSpark.jobsDuring(
+      graft.util.Snapshot(Seq((1L, "a")).toDF("k", "v"))) // one partition
+    assert(jobs == 1, s"Snapshot started $jobs jobs")
   }
+
 
   // --- r10 optimization pins: Snapshot.observed fuses the convergence /
   // count action into the materialization job. These tests pin (a) the
