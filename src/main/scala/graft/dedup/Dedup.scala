@@ -305,14 +305,17 @@ object Dedup {
 
   /**
    * Dedup cluster assignment: connected components of a near-dup pair
-   * graph by iterative min-label (hash-min) propagation — every doc gets
+   * graph ([[graft.util.ConnectedComponents.minLabel]]) — every doc gets
    * the smallest doc_id reachable in its component as `cluster_rep`;
    * docs in no pair are their own representative. The survivor set of a
-   * dedup pass is `cluster_rep = doc_id`.
+   * dedup pass is `cluster_rep = doc_id`. Every pair endpoint must be a
+   * doc of `docs`.
    *
-   * Scale shape: near-dup components are quasi-cliques (tiny diameter),
-   * so [[graft.util.ConnectedComponents.minLabel]] converges in a few
-   * rounds of one O(|E|) equi-join + one hash-min aggregate.
+   * Scale shape: a pair graph under the broadcast threshold is labeled by
+   * union-find on the driver in a few jobs. A larger one runs hash-min
+   * rounds of one O(|E|) equi-join + one hash-min aggregate; near-dup
+   * components are quasi-cliques (tiny diameter), so it converges in a
+   * few rounds, and `maxIter` caps them.
    */
   def clusters(docs: DataFrame, pairs: DataFrame, maxIter: Int = 50,
                idCol: String = "doc_id"): DataFrame =

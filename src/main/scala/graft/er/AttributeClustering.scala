@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
  * Spark-native notes: the attribute universe is tiny (|sources| x
  * |attributes|), so the signature/bucket stages run as DataFrames (the same
  * minhash arithmetic as graft.dedup.Dedup, shared constants) and connected
- * components run as iterative min-label propagation over DataFrames — no
- * GraphX dependency, deterministic, and still distributed if the attribute
- * graph ever grows. Divergence (documented): the reference hashes tokens
- * to dense ids via zipWithIndex (arrival order); we use the deterministic
- * polynomial hash so results are stable and SQL-reproducible.
+ * components run through [[graft.util.ConnectedComponents.minLabel]] —
+ * no GraphX dependency, deterministic, and still distributed if the
+ * attribute graph ever outgrows the broadcast threshold. Divergence
+ * (documented): the reference hashes tokens to dense ids via zipWithIndex
+ * (arrival order); we use the deterministic polynomial hash so results
+ * are stable and SQL-reproducible.
  */
 object AttributeClustering {
 
@@ -95,10 +96,11 @@ object AttributeClustering {
   }
 
   /**
-   * Connected components by iterative min-label propagation: label(v) =
-   * min qattr (string order) reachable; loops until fixpoint. The
-   * attribute graph has at most |sources|*|attrs| vertices, so this
-   * converges in a handful of tiny jobs.
+   * Connected components: label(v) = min qattr (Spark's string order)
+   * reachable. `vertices` must hold every edge endpoint. The attribute
+   * graph has at most |sources|*|attrs| vertices, so it stays under the
+   * broadcast threshold and minLabel labels it on the driver in a few
+   * tiny jobs.
    */
   def connectedComponents(vertices: DataFrame, edges: DataFrame): DataFrame =
     graft.util.ConnectedComponents.minLabel(

@@ -77,7 +77,8 @@ object ErPipeline {
     val matches =
       if (config.matcher == "none") candidates
       else Snapshot(score(attrs, candidates, config))
-    // minLabel already returns its last iteration's parquet reader
+    // minLabel already returns a snapshot reader; every matched endpoint
+    // is a profile_id of attrs (its contract)
     val entities = graft.util.ConnectedComponents.minLabel(
       attrs.select(col("profile_id")).distinct(), matches,
       idCol = "profile_id", srcCol = "p1", dstCol = "p2", labelCol = "entity_id")

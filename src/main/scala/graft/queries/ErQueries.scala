@@ -153,11 +153,13 @@ object ErQueries {
           graft.functions.FastRound.round(col("sim"), 9).as("sim"))
     }
 
-  /** Entity assignment: connected components (hash-min label propagation)
-   * over the matched pairs — every profile tagged with the smallest
-   * reachable profile_id as entity_id. Snapshot per dir: the entity view
-   * and the golden records both read it, and the CC iterations are the
-   * cost. */
+  /** Entity assignment: connected components
+   * ([[graft.util.ConnectedComponents.minLabel]]) over the matched pairs,
+   * whose endpoints are all part keys — every profile tagged with the
+   * smallest reachable profile_id as entity_id. Memoized per dir: the
+   * entity view and the golden records both read it. minLabel's result
+   * already is a snapshot reader, so the memo keeps its dir without a
+   * second write. */
   def entities(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("entities", d))(
       graft.util.ConnectedComponents.minLabel(

@@ -170,9 +170,9 @@ object TrainQueries {
   private def exactReps(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("exact", d))(Dedup.exact(docs(s, d)))
 
-  /** Dedup cluster assignment (MinHash-LSH near-dup graph -> hash-min CC),
+  /** Dedup cluster assignment (MinHash-LSH near-dup graph -> CC),
    * snapshot ONCE per dir: both the clusters query and the cluster-aware
-   * split consume it, and the CC iterations are the expensive part. */
+   * split consume it. */
   private def clusters3(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("clusters", d))(Dedup.clusters(docs(s, d),
       lshPairs(s, d).select("d1", "d2")))

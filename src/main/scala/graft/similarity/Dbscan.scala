@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
  * algebra:
  *  - core points: |neighbors| >= minPts - 1 (minPts counts the point
  *    itself) — one degree aggregate;
- *  - clusters: connected components over core-core edges (hash-min
- *    label propagation, [[graft.util.ConnectedComponents]]), labeled by
- *    the smallest reachable core id;
+ *  - clusters: connected components over core-core edges
+ *    ([[graft.util.ConnectedComponents]]; both endpoints are cores),
+ *    labeled by the smallest reachable core id;
  *  - border points: non-core with a core neighbor, assigned the MIN
  *    cluster label among their core neighbors (classic DBSCAN leaves
  *    border assignment scan-order-dependent; MIN makes it
@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
  *  - everything else is noise (cluster_id -1).
  *
  * Every stage shuffles on a vertex or edge key — degree, CC iteration,
- * border join are all O(edges) aggregates; nothing is driver-side.
+ * border join are all O(edges) aggregates; only a core-edge set under
+ * the broadcast threshold is labeled on the driver.
  */
 object Dbscan {
 

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /**
  * Materialize a DataFrame by round-tripping it through parquet and return a
@@ -81,8 +82,33 @@ object Snapshot {
 
   /** Like [[apply]], also returning the written path — for callers that
    * share the MATERIALIZATION across sessions by re-reading the path from
-   * the current session ([[Memo]]). */
+   * the current session ([[Memo]]). A frame that already is a bare scan of
+   * one snapshot dir (e.g. [[ConnectedComponents.minLabel]]'s result)
+   * keeps that dir: no write, no Spark job. */
   def materialize(df: DataFrame): (String, DataFrame) = {
+    val dir = existing(df).getOrElse(write(df))
+    // read back with the frame's own schema: inferring it from the footers
+    // costs a one-task Spark job per snapshot, and the file source makes
+    // the given schema nullable exactly as the writer stored it
+    (dir, df.sparkSession.read.schema(df.schema).parquet(dir))
+  }
+
+  /** The dir of `df` when its plan is only a scan of one `graft-snap-*`
+   * dir with the frame's own schema. */
+  private def existing(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.partitionSchema.isEmpty &&
+            fs.dataSchema == df.schema && fs.location.rootPaths.size == 1 &&
+            fs.location.rootPaths.head.getName.startsWith("graft-snap-") =>
+          Some(fs.location.rootPaths.head.toString)
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Writes `df` to a fresh `graft-snap-*` dir and returns the dir. */
+  private def write(df: DataFrame): String = {
     val spark = df.sparkSession
     val explicit = spark.conf.getOption("spark.graft.checkpoint.dir")
     val base = explicit.getOrElse {
@@ -104,9 +130,6 @@ object Snapshot {
     // cross the network and live longer.
     val w = df.write.mode("overwrite")
     (if (explicit.isEmpty) w.option("compression", "none") else w).parquet(dir)
-    // read back with the frame's own schema: inferring it from the footers
-    // costs a one-task Spark job per snapshot, and the file source makes
-    // the given schema nullable exactly as the writer stored it
-    (dir, spark.read.schema(df.schema).parquet(dir))
+    dir
   }
 }

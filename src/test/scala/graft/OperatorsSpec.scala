@@ -662,11 +662,86 @@ class OperatorsSpec extends AnyFunSuite {
   test("minLabel still throws when maxIter is below the diameter") {
     val vs = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id")
     val chain = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
-    assertThrows[IllegalStateException] {
-      graft.util.ConnectedComponents.minLabel(vs, chain,
-        idCol = "id", srcCol = "p1", dstCol = "p2", labelCol = "lbl",
-        maxIter = 2)
+    withoutBroadcast {
+      assertThrows[IllegalStateException] {
+        graft.util.ConnectedComponents.minLabel(vs, chain,
+          idCol = "id", srcCol = "p1", dstCol = "p2", labelCol = "lbl",
+          maxIter = 2)
+      }
     }
+  }
+
+  /** `body` with the broadcast threshold off: minLabel runs its loop. */
+  private def withoutBroadcast[T](body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  private def cc(vs: DataFrame, es: DataFrame): DataFrame =
+    graft.util.ConnectedComponents.minLabel(vs, es,
+      idCol = "id", srcCol = "p1", dstCol = "p2", labelCol = "lbl")
+
+  /** minLabel's (id, lbl) rows on the small-graph path, after checking
+   * that the loop gives the same label to every vertex id. */
+  private def sameBothWays(vs: DataFrame, es: DataFrame): Seq[(Any, Any)] = {
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1))).toSeq.sortBy(_.toString)
+    val ids = vs.collect().map(_.get(0)).toSet
+    val small = rows(cc(vs, es))
+    // the loop also labels endpoints missing from the vertices
+    val loop = withoutBroadcast(rows(cc(vs, es))).filter(r => ids(r._1))
+    assert(small.size == ids.size && small.map(_._1).toSet == ids,
+      "one row per id")
+    assert(small == loop)
+    small
+  }
+
+  test("minLabel: the small-graph path labels like the hash-min loop") {
+    val ring = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
+    val want = Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 9L)
+    // ring plus isolate, and the same vertices duplicated
+    assert(sameBothWays(Seq(1L, 2L, 3L, 4L, 9L).toDF("id"), ring) == want)
+    assert(sameBothWays(Seq(9L, 1L, 2L, 9L, 3L, 4L, 1L, 2L).toDF("id"), ring) == want)
+    // a null endpoint connects nothing
+    val withNull = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), None), (None, Some(4L)))
+      .toDF("p1", "p2")
+    assert(sameBothWays(Seq(1L, 2L, 3L, 4L).toDF("id"), withNull) ==
+      Seq(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 4L))
+    // U+FFFD sorts before U+1F600 in UTF-8 (Spark's min) but after its
+    // surrogate pair in UTF-16 (String.compareTo)
+    val (rc, smile) = ("\uFFFD", "\uD83D\uDE00")
+    assert(smile.compareTo(rc) < 0)
+    assert(sameBothWays(Seq(smile, rc, "a").toDF("id"),
+        Seq(smile -> rc).toDF("p1", "p2")) ==
+      Seq("a" -> "a", smile -> rc, rc -> rc).sortBy(_.toString))
+  }
+
+  test("minLabel: the small-graph path is exact where the loop hits maxIter") {
+    val vs = (1L to 60L).toDF("id")
+    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("p1", "p2")
+    assert(cc(vs, chain).as[(Long, Long)].collect().sorted.toSeq ==
+      (1L to 60L).map(_ -> 1L))
+    withoutBroadcast(assertThrows[IllegalStateException](cc(vs, chain)))
+  }
+
+  test("minLabel on a small graph starts at most 4 Spark jobs") {
+    val ring = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
+    val jobs = TestSpark.jobsDuring(
+      cc(Seq(1L, 2L, 3L, 4L, 9L).toDF("id"), ring))
+    assert(jobs <= 4, s"minLabel started $jobs jobs")
+  }
+
+  test("Snapshot of a snapshot reader: the same dir, no Spark job") {
+    val (path, reader) =
+      graft.util.Snapshot.materialize(Seq((1L, "a")).toDF("k", "v"))
+    var again: (String, DataFrame) = null
+    val jobs = TestSpark.jobsDuring {
+      again = graft.util.Snapshot.materialize(reader)
+    }
+    assert(jobs == 0, s"re-snapshot started $jobs jobs")
+    assert(again._1 == s"file:$path")
+    assert(again._2.collect().toSeq == reader.collect().toSeq)
   }
 
   test("kCore peels with the fused count (triangle + pendant chain)") {
