@@ -200,16 +200,13 @@ object TrainQueries {
     memo.frame(s, ("pq_index", d))(graft.similarity.ProductQuantization.encode(
       embs(s, d), pqBooks(s, d), m = 4, subDim = 16))
 
-  /** Pre-builds the memoized caches, exposed as INDEPENDENT chains so
-   * [[Warmup]] runs them on separate threads (one serial `warm` made the
-   * train task the whole warmup's critical path — 432s in the r6
-   * pre-bench while other pools sat finished):
-   *  - text chain: shingles -> dedup pair-graph -> connected components
-   *    (r5: the first consumer of dedup_clusters paid 47s for the CC
-   *    iterations), plus the simhash + winnow fingerprints;
-   *  - embedding chain: kmeans + semdedup centroids, PQ codebooks+index;
-   *  - LSH chain: the standing streaming corpus index (r5: every benched
-   *    ingest run rebuilt it).
+  /** Builds the memoized train-side caches, one group per call (each a
+   * [[Warmup]] step):
+   *  - text: shingles -> dedup pair graph -> connected components, plus
+   *    the exact-dedup representatives;
+   *  - fingerprints: simhash, winnowing, image and audio near-dup;
+   *  - embeddings: kmeans and semdedup centroids, PQ codebooks and index;
+   *  - LSH: the standing streaming corpus index.
    */
   def warmText(s: SparkSession, d: String): Unit = {
     shingles3(s, d); clusters3(s, d); exactReps(s, d); ()
@@ -222,12 +219,6 @@ object TrainQueries {
   }
   def warmLshIndex(s: SparkSession, d: String): Unit = {
     graft.streaming.EventStreams.lshCorpusIndex(s, d); ()
-  }
-
-  /** All chains serially (non-Warmup callers). */
-  def warm(s: SparkSession, d: String): Unit = {
-    warmText(s, d); warmFingerprints(s, d); warmEmbeddings(s, d)
-    warmLshIndex(s, d)
   }
 
   private def embs(s: SparkSession, d: String): DataFrame =

@@ -1,319 +1,115 @@
 package graft.queries
 
+import java.util.concurrent.Executors
+import scala.util.Try
 import org.apache.spark.sql.SparkSession
 import graft.er.WeightType
 
 /**
- * Eagerly builds every cross-query memoized cache (blocking/cleaning
- * spine, pair graph, per-scheme weighted graphs, supervised features,
- * attribute clusters, dedup shingles/simhash) so Bench's per-query times
- * measure the operator itself, not first-touch construction of shared
- * state — r1's numbers misattributed the whole supervised pipeline to
- * whichever query ran first. Bench times this as its own entry.
+ * Builds every cross-query memoized artifact and runs once each query whose
+ * first run pays a one-time cost (codegen, a standing index, stream
+ * checkpoint setup), so Bench's per-query times measure the operator, not
+ * first-touch construction.
  *
- * Structure: Spark schedules jobs from many threads at once, so
- * independent pipeline builds overlap their shuffles instead of leaving
- * most of local[32] idle between stages. Chains with NO dependency on the
- * main spine (BLAST, 3-source, dedup) run on their own threads across the
- * WHOLE warmup; the spine-dependent steps chain as a dependency DAG of
- * futures — each step starts the moment ITS inputs exist (r10: the former
- * barrier waves made ml_scored, the longest pole, wait behind
- * features_clean it never reads; the DAG overlaps the supervised chain
- * with the clean spine). Wall clock = max(longest independent chain,
- * true dependent critical path).
+ *  - The memo call graph is the dependency graph. A step is a memo accessor
+ *    or a driver query run once, and reads its inputs through the same
+ *    [[graft.util.Memo]]s: an input another step is building is awaited on
+ *    its completion cell, a missing one is built in place. A cell exists
+ *    only while its builder runs, so no step waits on a queued one and the
+ *    bounded pool cannot deadlock.
+ *  - Steps start in list order on one fixed pool of `defaultParallelism`
+ *    threads: the spine's roots (cleaned blocks, ground truth), the other
+ *    chains' roots, the rest of the spine, then the first-touch queries, so
+ *    few threads sit waiting on a cell.
+ *  - Every step runs even when another fails, and each failure is logged by
+ *    name. `run` returns only after every step has finished, then rethrows
+ *    the first failure in list order.
+ *
+ * The first-touch queries are those whose run1 was a multiple of their
+ * steady time in r5-r9 (er_cep_js_dirty 130.9 s vs 3.3 s in r5); the list
+ * has not been re-measured since.
  */
 object Warmup {
-  /** Per-step wall times of the latest run (steps execute concurrently —
-   * TrieMap). Bench surfaces this as `warmup_steps` in its JSON so warmup
-   * regressions are attributable round-over-round instead of hiding in
-   * one opaque warmup_caches number. */
+  /** Per-step wall times of the latest run, reported by Bench as
+   * `warmup_steps`. Steps overlap, so they do not add up to the wall time. */
   private val timings = scala.collection.concurrent.TrieMap.empty[String, Double]
   def lastTimings: Map[String, Double] = timings.toMap
 
-  private def step(name: String)(f: => Any): Unit = {
-    val t0 = System.nanoTime()
-    f
-    val dt = (System.nanoTime() - t0) / 1e9
-    timings(name) = dt
-    System.err.println(f"[warmup] $name $dt%.2fs")
-  }
+  /** A named step; `query` names the driver query it runs, if any. */
+  private[queries] final case class Step(name: String, run: () => Any, query: Option[String] = None)
 
-  /** Run steps concurrently and await ALL of them (Future.sequence with a
-   * generous finite timeout so a hung step can't block warmup forever);
-   * per-step failures are logged individually before the first is
-   * rethrown — one failed step no longer obscures its siblings. */
-  private def awaitAll(fs: Seq[scala.concurrent.Future[Unit]])
-                      (implicit ec: scala.concurrent.ExecutionContext): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    Await.result(Future.sequence(fs.toList), 30.minutes); ()
-  }
+  def run(s: SparkSession, d: String): Unit =
+    runSteps(steps(s, d), s.sparkContext.defaultParallelism)
 
-  def run(s: SparkSession, d: String): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    timings.clear()
-    // Two pools: the spine DAG (dependency-chained futures below) must not
-    // queue behind the ~25 independent chains, and vice versa — with one
-    // shared pool the critical path waited on unrelated queued tasks.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val spinePool = java.util.concurrent.Executors.newFixedThreadPool(5)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val spineEc: ExecutionContext = ExecutionContext.fromExecutorService(spinePool)
-    def taskOn(ecc: ExecutionContext)(name: String)(f: => Any): Future[Unit] =
-      Future(step(name)(f))(ecc).transform(
-        identity,
-        { e => System.err.println(s"[warmup] step $name FAILED: $e"); e })(ecc)
-    def task(name: String)(f: => Any): Future[Unit] = taskOn(ec)(name)(f)
-    var indep: Seq[Future[Unit]] = Nil
-    var spine: Seq[Future[Unit]] = Nil
-    try {
-      // independent chains: start now, join at the very end
-      indep = Seq(
-        task("blast_chain") {
-          step("blast_chain/clusters")(SupQueries.clusters(s, d))
-          step("blast_chain/weighted")(SupQueries.blastWeighted(s, d))
-        },
-        task("wnp_3src") {
-          ErQueries.all("er_wnp_cbs_3src")(s, d)
-          // first-touch the raw 3-source block emission too (r6 judge
-          // bench: 13.8s run1 vs 1.08s steady — the N-source separator
-          // codegen is distinct from the WNP consumer's plan)
-          step("wnp_3src/first_blocks")(
-            ErQueries.all("er_blocks_3src")(s, d).count())
-        },
-        // the train caches as four independent chains (one serial task
-        // made "train" the whole warmup's critical path: 432s in the r6
-        // pre-bench while the spine pools sat finished)
-        task("train/text") {
-          TrainQueries.warmText(s, d)
-          // decontamination-span stream: checkpoint setup + the standing
-          // span index build dominated run1 (r6 judge bench: 26.0s vs
-          // 1.75s steady) — pay it after the text caches it feeds on
-          step("train/first_decon_spans_stream")(
-            TrainQueries.all("txt_decon_spans_stream")(s, d).count())
-          // the streaming quality gate's first drain: checkpoint setup
-          // + stream codegen, serialized after the other doc streams
-          step("train/first_qgate_stream")(
-            TrainQueries.all("txt_quality_filter_stream")(s, d).count())
-        },
-        task("train/fingerprints") {
-          TrainQueries.warmFingerprints(s, d)
-          // streaming image-ingest gate AFTER the dhash caches: its
-          // standing banded index is its own per-dir path cache, plus
-          // the usual checkpoint + stream codegen first-drain cost
-          step("train/first_mm_neardup_stream")(
-            TrainQueries.all("mm_neardup_stream")(s, d).count())
-        },
-        task("train/embeddings") {
-          TrainQueries.warmEmbeddings(s, d)
-          // high-threshold cosine near-dup: its banded candidate join
-          // compiles apart from the base variant's (10.1s run1 vs 1.65s
-          // steady in the r6 judge bench)
-          step("train/first_neardup_hi")(
-            TrainQueries.all("ann_cos_neardup_hi")(s, d).count())
-          // after the PQ codebooks exist (avoids a duplicate concurrent
-          // build through the memo), first-touch the streaming encode:
-          // checkpoint setup + stream codegen was 10.1s run1 vs 0.9s
-          step("train/first_pq_stream")(
-            TrainQueries.all("ann_pq_stream")(s, d).count())
-        },
-        task("train/lsh") {
-          TrainQueries.warmLshIndex(s, d)
-          // first run of the streaming-LSH gate AFTER its corpus index is
-          // built: stream-side band-key codegen + checkpoint setup were
-          // 9.6s run1 vs 2.0s steady in the r6 pre-bench
-          step("train/first_lsh_stream")(
-            TrainQueries.all("dedup_lsh_stream")(s, d).count())
-          // recall-calibration join over the same index: its own plan
-          // compile (sf0.1 bench: 2.9s run1 vs 0.14s steady)
-          step("train/first_lsh_recall")(
-            TrainQueries.all("dedup_lsh_recall")(s, d).count())
-        },
-        // GSPSN depends only on the raw blocking keys: run both variants
-        // once here — the window-sweep emission generates large codegen
-        // classes whose first compile dominated run1 (r5: 51s vs 2.4s)
-        task("first/gspsn")(SupQueries.all("prog_gspsn")(s, d).count()),
-        task("first/gspsn_clean")(SupQueries.all("prog_gspsn_clean")(s, d).count()),
-        // the incremental WNP snapshot, shared by pruning + matching, and
-        // a first run of the JS variant (its per-profile key-count joins
-        // compile large codegen classes: 9.3s run1 vs 4.8s steady in r6)
-        task("incr_wnp") {
-          ErQueries.incrementalWnpCbs(s, d)
-          step("incr_wnp/first_js")(ErQueries.all("er_incremental_js")(s, d).count())
-        },
-        // remaining r6 run1-cliff queries, all dependency-free: their
-        // first execution pays plan + codegen (txt_repetition 10.4s,
-        // mm_chunks 8.3s, er_tokens_stream 5.9s vs 1.3/0.1/1.4s steady)
-        task("first/txt_repetition")(TrainQueries.all("txt_repetition")(s, d).count()),
-        task("first/mm_chunks")(TrainQueries.all("mm_chunks")(s, d).count()),
-        // the batched-decode RDD plan (asMultimodal -> mapPartitions)
-        // compiles apart from mm_chunks' pure-column path (r9: 1.07s run1
-        // vs 0.16s steady); one decode first-touch covers resize +
-        // frame_sample + decode_features, which share it
-        task("first/mm_resize")(TrainQueries.all("mm_resize")(s, d).count()),
-        task("first/er_tokens_stream")(ErQueries.all("er_tokens_stream")(s, d).count()),
-        task("first/txt_decon_bloom")(TrainQueries.all("txt_decon_bloom")(s, d).count()),
-        task("first/txt_boilerplate")(TrainQueries.all("txt_boilerplate")(s, d).count()),
-        // char-level ExactSubstr: builds the memoized span snapshot
-        // (window generation + canonical election), then the apply
-        // stage's own reassembly plan over it
-        task("first/txt_substr") {
-          TrainQueries.all("txt_substr_dedup")(s, d).count()
-          step("first/txt_substr_apply")(
-            TrainQueries.all("txt_substr_apply")(s, d).count())
-          // the streaming gate AFTER the batch family: its standing
-          // repeated-window index is its own per-dir path cache, plus the
-          // usual checkpoint + stream codegen first-drain cost
-          step("first/txt_substr_stream")(
-            TrainQueries.all("txt_substr_stream")(s, d).count())
-        },
-        // token-level span family: builds the memoized L=10 span snapshot,
-        // then the apply stage's reassembly plan over it
-        task("first/txt_spans") {
-          TrainQueries.all("txt_span_dedup")(s, d).count()
-          step("first/txt_span_apply")(
-            TrainQueries.all("txt_span_apply")(s, d).count())
-        },
-        // DSIR: the bucket-model/grained-ratio plan compiles apart from
-        // the other token consumers; the select adds the Gumbel ranking
-        task("first/txt_dsir") {
-          TrainQueries.all("txt_dsir_weights")(s, d).count()
-          step("first/txt_dsir_select")(
-            TrainQueries.all("txt_dsir_select")(s, d).count())
-          // the streaming gate AFTER the batch pass: its model snapshot
-          // is its own (per-dir path cache) but the checkpoint + stream
-          // codegen is the usual first-drain cost
-          step("first/txt_dsir_stream")(
-            TrainQueries.all("txt_dsir_stream")(s, d).count())
-        },
-        task("first/txt_vocab")(TrainQueries.all("txt_vocab")(s, d).count()),
-        task("first/ann_brute")(TrainQueries.all("ann_brute_topk")(s, d).count()),
-        task("first/snb")(ErQueries.all("er_snb_pairs")(s, d).count()),
-        // stopword-filtered token keys: the stopword-list broadcast +
-        // its filter codegen compile apart from the plain tokenKeys plan
-        // (r7 judge bench: 3.30s run1 vs 0.73s steady)
-        task("first/er_tokens_sw")(ErQueries.all("er_tokens_sw")(s, d).count()),
-        // r6 additions whose first run pays plan + codegen + (for the
-        // stream) checkpoint setup
-        task("first/ppjoin")(TrainQueries.all("dedup_ppjoin")(s, d).count()),
-        task("first/dbscan")(TrainQueries.all("ann_dbscan")(s, d).count()),
-        // streaming merge: checkpoint setup + complete-mode state codegen
-        task("first/merge_stream")(
-          TrainQueries.all("evt_merge_stream")(s, d).count()),
-        // BPE learning: 6 sequential argmax rounds + per-round snapshots
-        // build the shared merge-table cache
-        task("first/bpe")(
-          TrainQueries.all("txt_bpe_merges")(s, d).count()),
-        task("first/burst_stream")(
-          TrainQueries.all("evt_burst_stream")(s, d).count()),
-        // r6 judge-bench streaming cliffs: checkpoint setup + stateful
-        // codegen (sessions 20.7s/2.03s, funnel 8.9s/2.61s run1/steady)
-        task("first/sessions_stream")(
-          TrainQueries.all("evt_sessions_stream")(s, d).count()),
-        task("first/funnel_stream")(
-          TrainQueries.all("evt_funnel_join_stream")(s, d).count()),
-        // bucketed fact layouts: the one-time write every later
-        // co-located join amortizes — pay it here, not in run1
-        task("bucketed_layout") {
-          graft.sources.Bucketed.table(s, d, "lineitem", "l_orderkey")
-          graft.sources.Bucketed.table(s, d, "orders", "o_orderkey")
-        },
-        // removal audit first-touch: the containment join + the audit's
-        // equi-join fan-in (its cluster/shingle inputs are warmed by the
-        // dedup chain, the analysis by txt_analysis's own first run)
-        task("first/removal_audit")(
-          TrainQueries.all("txt_removal_audit")(s, d).count()),
-        // streaming as-of: checkpoint setup + the standing click snapshot
-        task("first/asof_stream")(
-          TrainQueries.all("evt_asof_stream")(s, d).count()))
-      // The blocking/cleaning spine as a DEPENDENCY DAG (futures chained on
-      // their actual inputs), replacing the former barrier waves: the waves
-      // made every task wait for the slowest member of the previous wave —
-      // ml_scored (LR training, the longest pole) sat behind features_clean
-      // it never reads, and the dirty wide/wnp chain behind the clean one.
-      // Same steps, same names, no new work — only the false barriers go.
-      // (guide §2.6: actions are only sequential because the driver calls
-      // them sequentially; FIFO back-fill does the rest.)
-      def after(deps: Future[Unit]*)(name: String)(f: => Any): Future[Unit] =
-        Future.sequence(deps.toList)(
-            scala.collection.BuildFrom.buildFromIterableOps, spineEc)
-          .flatMap(_ => taskOn(spineEc)(name)(f))(spineEc)
-      val cleanedD = taskOn(spineEc)("cleaned_dirty")(ErQueries.cleaned(s, d, clean = false))
-      val cleanedC = taskOn(spineEc)("cleaned_clean")(ErQueries.cleaned(s, d, clean = true))
-      val gt = taskOn(spineEc)("gt_convert")(ErQueries.gtConverted(s, d))
-      val pairsD = after(cleanedD)("pairs_dirty")(ErQueries.cachedPairs(s, d, clean = false))
-      val pairsC = after(cleanedC)("pairs_clean")(ErQueries.cachedPairs(s, d, clean = true))
-      val pstatsD = after(cleanedD)("pstats_dirty")(ErQueries.cachedProfileStats(s, d, clean = false))
-      val pstatsC = after(cleanedC)("pstats_clean")(ErQueries.cachedProfileStats(s, d, clean = true))
-      // the supervised chain needs only (cleaned_dirty, gt): chained here,
-      // it overlaps the clean spine instead of gating it — ml_scored (LR
-      // training) is the single longest warmup step
-      val features = after(cleanedD, gt)("features")(SupQueries.features(s, d))
-      val featuresC = after(cleanedC, gt)("features_clean")(SupQueries.featuresClean(s, d))
-      val scored = after(features)("scored")(SupQueries.scored(s, d))
-      val mlScored = after(scored)("ml_scored")(SupQueries.mlScored(s, d))
-      val positives = after(scored)("positives")(SupQueries.positives(s, d))
-      // sup_cnp's first run pays the supervised directed top-k codegen
-      // (r6: 7.3s run1 vs 1.1s steady); needs positives + the dirty spine
-      val supCnp = after(positives)("first/sup_cnp")(
-        SupQueries.all("sup_cnp")(s, d).count())
-      val wideD = after(pairsD, pstatsD)("wide_dirty")(
-        ErQueries.wideWeighted(s, d, clean = false))
-      val selfW = after(pairsD, pstatsD)("self_weights")(
-        ErQueries.selfWeightsCached(s, d, WeightType.CBS))
-      val wideC = after(pairsC, pstatsC)("wide_clean")(
-        ErQueries.wideWeighted(s, d, clean = true))
-      val wnpCbs = after(wideD, selfW)("wnp_cbs")(ErQueries.wnpCbsAvgOrDirty(s, d))
-      val wnpCbsClean = after(wideC)("wnp_cbs_clean")(ErQueries.wnpCbsAvgOrClean(s, d))
-      val directedC = after(wideC)("directed_cbs_clean")(ErQueries.directedCbsClean(s, d))
-      // the JS max2 WNP's first execution compiles the widest
-      // threshold-join codegen of the scheme matrix (15.9s run1 vs
-      // 0.8s steady in the r6 pre-bench)
-      val wnpJsMax2 = after(wideD, selfW)("first/wnp_js_max2")(
-        ErQueries.all("er_wnp_js_max2_or_dirty")(s, d).count())
-      // first-touch pass over the queries whose run1 was a multiple of
-      // their steady time in r5 (er_cep_js_dirty 130.9s vs 3.3s,
-      // er_wnp_cbs_avg_and_dirty 23.2s): these terminate in no Snapshot,
-      // so the cost is per-plan (codegen of the Prefix scan / threshold
-      // joins) — one execution here moves it out of every consumer's run1
-      val cepJs = after(wideD)("first/cep_js")(
-        ErQueries.all("er_cep_js_dirty")(s, d).count())
-      val cepCbs = after(wideD)("first/cep_cbs")(
-        ErQueries.all("er_cep_cbs_dirty")(s, d).count())
-      // the CLEAN CEP histogram walk compiles its own codegen over the
-      // clean pair graph (r6 judge bench: 12.0s run1 vs 3.38s steady)
-      val cepCbsClean = after(wideC)("first/cep_cbs_clean")(
-        ErQueries.all("er_cep_cbs_clean")(s, d).count())
-      val wnpCbsAnd = after(wideD, selfW)("first/wnp_cbs_and")(
-        ErQueries.all("er_wnp_cbs_avg_and_dirty")(s, d).count())
-      // blast_keys_nodefault builds its own clustering chain — no spine
-      // dependency (r6: 3.8s run1 vs 0.05s steady on first-touch snapshot)
-      val blastKeys = task("first/blast_keys")(
-        SupQueries.all("blast_keys_nodefault")(s, d).count())
-      // matched pairs -> entity CC chain (shared by er_match_edit,
-      // er_entities, er_golden), then the triangle enumeration's first
-      // run over it (10.1s run1 vs 1.0s steady in the r6 pre-bench)
-      val entities = after(wnpCbs)("entities") {
-        ErQueries.entities(s, d)
-        step("entities/first_triangles")(
-          ErQueries.all("er_triangles")(s, d).count())
-      }
-      spine = Seq(cleanedD, cleanedC, gt, pairsD, pairsC, pstatsD, pstatsC,
-        features, featuresC, scored, mlScored, positives, supCnp,
-        wideD, selfW, wideC, wnpCbs, wnpCbsClean, directedC, wnpJsMax2,
-        cepJs, cepCbs, cepCbsClean, wnpCbsAnd, blastKeys, entities)
-      awaitAll(spine)
-      awaitAll(indep)
-    } finally {
-      // A failed spine future skips awaitAll(indep) — drain BOTH groups
-      // here regardless, so their in-flight Spark jobs can't overlap (and
-      // contaminate) Bench's timed query loop after a warmup failure.
-      // Await.ready is a no-op when they already finished and does not
-      // rethrow their failures.
-      (spine ++ indep).foreach(f => scala.util.Try(Await.ready(f, 30.minutes)))
-      pool.shutdown()
-      spinePool.shutdown()
+  /** Memo accessors, then first-touch queries. Building the list runs nothing. */
+  private[queries] def steps(s: SparkSession, d: String): Seq[Step] = {
+    def b(name: String)(f: => Any) = Step(name, () => f)
+    import ErQueries._, SupQueries._, TrainQueries._
+    Seq(
+      b("cleaned_dirty")(cleaned(s, d, clean = false)), b("gt_convert")(gtConverted(s, d)),
+      b("cleaned_clean")(cleaned(s, d, clean = true)), b("blast_chain/clusters")(clusters(s, d)),
+      b("train/embeddings")(warmEmbeddings(s, d)), b("train/fingerprints")(warmFingerprints(s, d)),
+      b("train/text")(warmText(s, d)), b("incr_wnp")(incrementalWnpCbs(s, d)),
+      b("wnp_3src")(ErQueries.all("er_wnp_cbs_3src")(s, d)), b("train/lsh")(warmLshIndex(s, d)),
+      b("bucketed_layout")(Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
+        .foreach { case (t, k) => graft.sources.Bucketed.table(s, d, t, k) }),
+      b("pairs_dirty")(cachedPairs(s, d, clean = false)), b("features")(features(s, d)),
+      b("pstats_dirty")(cachedProfileStats(s, d, clean = false)),
+      b("pairs_clean")(cachedPairs(s, d, clean = true)), b("features_clean")(featuresClean(s, d)),
+      b("pstats_clean")(cachedProfileStats(s, d, clean = true)), b("scored")(scored(s, d)),
+      b("wide_dirty")(wideWeighted(s, d, clean = false)),
+      b("self_weights")(selfWeightsCached(s, d, WeightType.CBS)),
+      b("wide_clean")(wideWeighted(s, d, clean = true)), b("ml_scored")(mlScored(s, d)),
+      b("positives")(positives(s, d)), b("wnp_cbs")(wnpCbsAvgOrDirty(s, d)),
+      b("wnp_cbs_clean")(wnpCbsAvgOrClean(s, d)), b("entities")(entities(s, d)),
+      b("directed_cbs_clean")(directedCbsClean(s, d)),
+      b("blast_chain/weighted")(blastWeighted(s, d))
+    ) ++ Seq(
+      "entities/first_triangles" -> "er_triangles", "first/sup_cnp" -> "sup_cnp",
+      "first/wnp_js_max2" -> "er_wnp_js_max2_or_dirty", "first/cep_js" -> "er_cep_js_dirty",
+      "first/cep_cbs" -> "er_cep_cbs_dirty", "first/cep_cbs_clean" -> "er_cep_cbs_clean",
+      "first/wnp_cbs_and" -> "er_wnp_cbs_avg_and_dirty",
+      "first/blast_keys" -> "blast_keys_nodefault", "wnp_3src/first_blocks" -> "er_blocks_3src",
+      "incr_wnp/first_js" -> "er_incremental_js",
+      "train/first_decon_spans_stream" -> "txt_decon_spans_stream",
+      "train/first_qgate_stream" -> "txt_quality_filter_stream",
+      "train/first_mm_neardup_stream" -> "mm_neardup_stream",
+      "train/first_neardup_hi" -> "ann_cos_neardup_hi", "train/first_pq_stream" -> "ann_pq_stream",
+      "train/first_lsh_stream" -> "dedup_lsh_stream",
+      "train/first_lsh_recall" -> "dedup_lsh_recall", "first/gspsn" -> "prog_gspsn",
+      "first/gspsn_clean" -> "prog_gspsn_clean", "first/txt_repetition" -> "txt_repetition",
+      "first/mm_chunks" -> "mm_chunks", "first/mm_resize" -> "mm_resize",
+      "first/er_tokens_stream" -> "er_tokens_stream", "first/txt_decon_bloom" -> "txt_decon_bloom",
+      "first/txt_boilerplate" -> "txt_boilerplate", "first/txt_substr" -> "txt_substr_dedup",
+      "first/txt_substr_apply" -> "txt_substr_apply",
+      "first/txt_substr_stream" -> "txt_substr_stream", "first/txt_spans" -> "txt_span_dedup",
+      "first/txt_span_apply" -> "txt_span_apply", "first/txt_dsir" -> "txt_dsir_weights",
+      "first/txt_dsir_select" -> "txt_dsir_select", "first/txt_dsir_stream" -> "txt_dsir_stream",
+      "first/txt_vocab" -> "txt_vocab", "first/ann_brute" -> "ann_brute_topk",
+      "first/snb" -> "er_snb_pairs", "first/er_tokens_sw" -> "er_tokens_sw",
+      "first/ppjoin" -> "dedup_ppjoin", "first/dbscan" -> "ann_dbscan",
+      "first/merge_stream" -> "evt_merge_stream", "first/bpe" -> "txt_bpe_merges",
+      "first/burst_stream" -> "evt_burst_stream", "first/sessions_stream" -> "evt_sessions_stream",
+      "first/funnel_stream" -> "evt_funnel_join_stream",
+      "first/removal_audit" -> "txt_removal_audit", "first/asof_stream" -> "evt_asof_stream"
+    ).map { case (name, q) =>
+      Step(name, () => graft.SparkEntry.queries(q)(s, d).count(), Some(q))
     }
+  }
+
+  /** Runs `steps` in list order on `threads` threads, as the contract above says. */
+  private[queries] def runSteps(steps: Seq[Step], threads: Int): Unit = {
+    timings.clear()
+    val pool = Executors.newFixedThreadPool(threads)
+    val pending = steps.map(st => pool.submit[Unit] { () =>
+      val t0 = System.nanoTime()
+      try st.run() catch { case e: Throwable =>
+        System.err.println(s"[warmup] step ${st.name} FAILED: $e"); throw e }
+      timings(st.name) = (System.nanoTime() - t0) / 1e9
+      System.err.println(f"[warmup] ${st.name} ${timings(st.name)}%.2fs")
+    })
+    pool.shutdown() // takes no new steps; the queued ones still run
+    // get() wraps a step's failure in an ExecutionException
+    pending.flatMap(f => Try(f.get()).failed.toOption).headOption.foreach(e => throw e.getCause)
   }
 }

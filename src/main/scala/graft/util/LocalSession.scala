@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * The one local session every driver-contract main shares (Bench, Verify,
- * RunOne, BenchOne). A single builder keeps the four environments in
+ * BenchOne, PlanDump). A single builder keeps the four environments in
  * lockstep — config drift between Bench and a profiling main would make
  * cliff attribution measure a different engine than the one benched.
  */
