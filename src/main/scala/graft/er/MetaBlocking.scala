@@ -30,6 +30,15 @@ object ComparisonType extends Enumeration {
  * a column expression over per-profile / global aggregates joined back in
  * (broadcast when small, shuffle otherwise — Catalyst/AQE decide).
  *
+ * Weighting has one body per graph: the pair graph and the dirty-ER self
+ * edges each get one builder that computes the columns of exactly the
+ * schemes its caller asks for, all from the one formula [[weightColumn]]
+ * (applied in both endpoint orientations for pairs). The one-scheme
+ * ([[weightedPairs]], [[selfWeights]]) and all-scheme ([[weightedPairsAll]],
+ * [[selfWeightsAll]]) entry points are views over those builders, so they
+ * agree bit for bit; only a scheme set that contains EJS joins the degree
+ * aggregate and the edge total.
+ *
  * Weight semantics follow the (normative) Python reference
  * python/sparker/common_node_pruning.py, including its quirks:
  *  - ARCS divides CBS by the product of the comparison counts of *all* the
@@ -64,37 +73,26 @@ object MetaBlocking {
    */
   def cbsPairs(members: DataFrame, clean: Boolean,
                blockEntropies: Option[DataFrame] = None): DataFrame = {
+    val src = blockEntropies.fold(members)(ent => members.join(ent, Seq("key"), "left")
+      .withColumn("entropy", coalesce(col("entropy"), lit(0.0))))
+    val a = src.select(Seq(col("key"), col("profile_id").as("p1"), col("source_id").as("s1")) ++
+      blockEntropies.map(_ => col("entropy")): _*)
+    val b = src.select(col("key"), col("profile_id").as("p2"), col("source_id").as("s2"))
+    val cond = if (clean) col("p1") < col("p2") && col("s1") =!= col("s2")
+               else col("p1") < col("p2")
+    val grouped = a.join(b, Seq("key")).filter(cond).groupBy("p1", "p2")
     blockEntropies match {
-      case Some(ent) =>
-        val withEnt = members.join(ent, Seq("key"), "left")
-          .withColumn("entropy", coalesce(col("entropy"), lit(0.0)))
-        val a = withEnt.select(col("key"), col("profile_id").as("p1"),
-          col("source_id").as("s1"), col("entropy"))
-        val b = withEnt.select(col("key"), col("profile_id").as("p2"),
-          col("source_id").as("s2"))
-        val cond = if (clean) col("p1") < col("p2") && col("s1") =!= col("s2")
-                   else col("p1") < col("p2")
-        a.join(b, Seq("key")).filter(cond)
-          .groupBy("p1", "p2")
-          .agg(count(lit(1)).as("cbs"),
-            // deterministic (sorted sequential) double sum only in verify
-            // mode; plain codegen'd sum otherwise (Det doc)
-            graft.util.Det.sumD(graft.util.Det.exactSums(members.sparkSession), "entropy")
-              .as("entropy_sum"))
+      case Some(_) =>
+        grouped.agg(count(lit(1)).as("cbs"),
+          // deterministic (sorted sequential) double sum only in verify
+          // mode; plain codegen'd sum otherwise (Det doc)
+          graft.util.Det.sumD(graft.util.Det.exactSums(members.sparkSession), "entropy")
+            .as("entropy_sum"))
       case None =>
         // no entropy requested: keep the hot self-join a pure codegen'd
         // count aggregate (a collect_list here costs real memory/CPU on
         // the O(co-occurrence) intermediate — 225s -> 80s at sf0.1)
-        val a = members.select(col("key"), col("profile_id").as("p1"),
-          col("source_id").as("s1"))
-        val b = members.select(col("key"), col("profile_id").as("p2"),
-          col("source_id").as("s2"))
-        val cond = if (clean) col("p1") < col("p2") && col("s1") =!= col("s2")
-                   else col("p1") < col("p2")
-        a.join(b, Seq("key")).filter(cond)
-          .groupBy("p1", "p2")
-          .agg(count(lit(1)).as("cbs"))
-          .withColumn("entropy_sum", lit(0.0))
+        grouped.agg(count(lit(1)).as("cbs")).withColumn("entropy_sum", lit(0.0))
     }
   }
 
@@ -157,14 +155,17 @@ object MetaBlocking {
   /**
    * Directed weight of edge (a -> b) computed "from a's perspective", the
    * orientation the reference uses in both its thresholds pass (all incident
-   * edges) and pruning pass (a = smaller id). Expects columns:
-   * cbs, entropy_sum, bp_a, bp_b, nb_valid_a, arcs_denom_a, degree_a,
-   * degree_b, number_of_blocks, number_of_edges.
+   * edges) and pruning pass (a = smaller id). `a` and `b` are the column
+   * suffixes of the two endpoints: ("a", "b") weighs a pair from p1's side,
+   * ("b", "a") from p2's. Expects columns: cbs, entropy_sum, bp_<a>, bp_<b>,
+   * nb_valid_<a>, arcs_denom_<a>, number_of_blocks and, for EJS only,
+   * degree_<a>, degree_<b>, number_of_edges.
    */
-  def weightColumn(wt: WeightType.Value, useEntropy: Boolean): Column = {
+  def weightColumn(wt: WeightType.Value, useEntropy: Boolean,
+                   a: String = "a", b: String = "b"): Column = {
     val cbs = col("cbs").cast("double")
-    val bpA = col("bp_a").cast("double")
-    val bpB = col("bp_b").cast("double")
+    val bpA = col(s"bp_$a").cast("double")
+    val bpB = col(s"bp_$b").cast("double")
     val nb = col("number_of_blocks").cast("double")
     val ent = col("entropy_sum")
     wt match {
@@ -180,13 +181,13 @@ object MetaBlocking {
         val chi = chiSquare(cbs, bpB, bpA, nb)
         if (useEntropy) chi * ent else chi
       case WeightType.ARCS =>
-        val w = cbs / col("arcs_denom_a")
-        if (useEntropy) w * pow(ent, col("nb_valid_a").cast("double")) else w
+        val w = cbs / col(s"arcs_denom_$a")
+        if (useEntropy) w * pow(ent, col(s"nb_valid_$a").cast("double")) else w
       case WeightType.EJS =>
         val js = cbs / (bpA + bpB - cbs)
         val e = col("number_of_edges")
-        val degB = col("degree_b").cast("double")
-        val epA = col("degree_a").cast("double") + lit(EjsEps)
+        val degB = col(s"degree_$b").cast("double")
+        val epA = col(s"degree_$a").cast("double") + lit(EjsEps)
         val inner = log10(e / epA)
         val raw =
           if (useEntropy) (js * ent) * log10(e / degB * inner)
@@ -197,147 +198,60 @@ object MetaBlocking {
     }
   }
 
-  /**
-   * Weighted comparison graph: joins per-profile stats onto the CBS pairs and
-   * computes the directed weights `w1` (from p1's perspective — the weight
-   * the reference's pruning pass uses) and `w2` (from p2's perspective — only
-   * needed by the thresholds pass for asymmetric schemes).
-   */
-  def weightedPairs(
-      pairs: DataFrame,
-      profStats: DataFrame,
-      numberOfBlocks: DataFrame, // 1-row (number_of_blocks)
-      wt: WeightType.Value,
-      useEntropy: Boolean = false): DataFrame = {
-    val s1 = profStats.select(col("profile_id").as("p1"), col("bp").as("bp_a"),
-      col("nb_valid").as("nb_valid_a"), col("arcs_denom").as("arcs_denom_a"))
-    val s2 = profStats.select(col("profile_id").as("p2"), col("bp").as("bp_b"),
-      col("nb_valid").as("nb_valid_b"), col("arcs_denom").as("arcs_denom_b"))
-    var df = pairs.join(s1, Seq("p1")).join(s2, Seq("p2")).crossJoin(numberOfBlocks)
-    if (wt == WeightType.EJS) {
-      val (degrees, total) = edgeStatistics(pairs)
-      df = df
-        .join(degrees.select(col("p").as("p1"), col("degree").as("degree_a")), Seq("p1"))
-        .join(degrees.select(col("p").as("p2"), col("degree").as("degree_b")), Seq("p2"))
-        .crossJoin(total)
-    } else {
-      df = df.withColumn("degree_a", lit(0L)).withColumn("degree_b", lit(0L))
-        .withColumn("number_of_edges", lit(0.0))
-    }
-    df.withColumn("w1", weightColumn(wt, useEntropy))
-      .withColumn("w2", swapWeight(wt, useEntropy))
-      .select("p1", "p2", "cbs", "entropy_sum", "w1", "w2")
-  }
-
-  /** Lower-case column suffix for a weight scheme in the wide weighted
-   * graph ([[weightedPairsAll]]): w1_cbs, w2_ejs, ... */
+  /** Lower-case column suffix for a weight scheme in the weighted graphs:
+   * w1_cbs, w2_ejs, w_js, ... */
   def schemeName(wt: WeightType.Value): String = wt.toString.toLowerCase
 
   /**
-   * The WIDE weighted graph: every weight scheme computed in ONE pass over
-   * the pair graph — one stats join, one degree aggregation, twelve weight
-   * columns (`w1_<scheme>`, `w2_<scheme>`) in a single codegen'd projection.
-   * At 100 TB this is the difference between one shuffle over the O(edges)
-   * pair graph and six: the schemes share all their inputs (cbs, per-profile
-   * block counts, EJS degrees), so deriving a scheme is a column select on
-   * the materialized result, not a recomputation. The per-scheme arithmetic
-   * is [[weightColumn]]/[[swapWeight]] verbatim — bit-identical to the
-   * narrow [[weightedPairs]] path.
+   * The weighted comparison graph for `schemes`, in one pass over the pair
+   * graph: one stats join per endpoint and, only when EJS is among the
+   * schemes, the degree aggregate and the edge total; then every weight
+   * column in a single codegen'd projection — (p1, p2, cbs, entropy_sum,
+   * w1_<s>, w2_<s>, ...). `w1` is the weight from p1's perspective (the one
+   * the reference's pruning pass uses), `w2` from p2's (only needed by the
+   * thresholds pass for asymmetric schemes).
    */
-  def weightedPairsAll(
-      pairs: DataFrame,
-      profStats: DataFrame,
-      numberOfBlocks: DataFrame,
-      useEntropy: Boolean = false): DataFrame = {
-    val s1 = profStats.select(col("profile_id").as("p1"), col("bp").as("bp_a"),
-      col("nb_valid").as("nb_valid_a"), col("arcs_denom").as("arcs_denom_a"))
-    val s2 = profStats.select(col("profile_id").as("p2"), col("bp").as("bp_b"),
-      col("nb_valid").as("nb_valid_b"), col("arcs_denom").as("arcs_denom_b"))
-    val (degrees, total) = edgeStatistics(pairs)
-    val df = pairs.join(s1, Seq("p1")).join(s2, Seq("p2")).crossJoin(numberOfBlocks)
-      .join(degrees.select(col("p").as("p1"), col("degree").as("degree_a")), Seq("p1"))
-      .join(degrees.select(col("p").as("p2"), col("degree").as("degree_b")), Seq("p2"))
-      .crossJoin(total)
-    val wCols = WeightType.values.toSeq.flatMap { wt =>
-      Seq(weightColumn(wt, useEntropy).as(s"w1_${schemeName(wt)}"),
-        swapWeight(wt, useEntropy).as(s"w2_${schemeName(wt)}"))
-    }
-    df.select(Seq(col("p1"), col("p2"), col("cbs"), col("entropy_sum")) ++ wCols: _*)
+  private def weigh(pairs: DataFrame, profStats: DataFrame, numberOfBlocks: DataFrame,
+                    schemes: Seq[WeightType.Value], useEntropy: Boolean): DataFrame = {
+    def side(p: String, s: String) = profStats.select(col("profile_id").as(p),
+      col("bp").as(s"bp_$s"), col("nb_valid").as(s"nb_valid_$s"),
+      col("arcs_denom").as(s"arcs_denom_$s"))
+    val df = pairs.join(side("p1", "a"), Seq("p1")).join(side("p2", "b"), Seq("p2"))
+      .crossJoin(numberOfBlocks)
+    val withDegrees =
+      if (!schemes.contains(WeightType.EJS)) df
+      else {
+        val (degrees, total) = edgeStatistics(pairs)
+        df.join(degrees.select(col("p").as("p1"), col("degree").as("degree_a")), Seq("p1"))
+          .join(degrees.select(col("p").as("p2"), col("degree").as("degree_b")), Seq("p2"))
+          .crossJoin(total)
+      }
+    val wCols = schemes.flatMap(wt => Seq(
+      weightColumn(wt, useEntropy).as(s"w1_${schemeName(wt)}"),
+      weightColumn(wt, useEntropy, "b", "a").as(s"w2_${schemeName(wt)}")))
+    withDegrees.select(Seq(col("p1"), col("p2"), col("cbs"), col("entropy_sum")) ++ wCols: _*)
   }
 
-  /** One scheme's (p1, p2, cbs, entropy_sum, w1, w2) view of the wide graph
-   * — a pruned column select, bit-identical to [[weightedPairs]] output. */
+  /** One scheme's weighted graph (p1, p2, cbs, entropy_sum, w1, w2). */
+  def weightedPairs(pairs: DataFrame, profStats: DataFrame,
+                    numberOfBlocks: DataFrame, // 1-row (number_of_blocks)
+                    wt: WeightType.Value, useEntropy: Boolean = false): DataFrame =
+    schemeView(weigh(pairs, profStats, numberOfBlocks, Seq(wt), useEntropy), wt)
+
+  /** The WIDE weighted graph: all six schemes from one pass. At 100 TB that
+   * is one shuffle over the O(edges) pair graph instead of six, and
+   * deriving a scheme is a column select on the materialized result
+   * ([[schemeView]]), bit-identical to [[weightedPairs]]. */
+  def weightedPairsAll(pairs: DataFrame, profStats: DataFrame, numberOfBlocks: DataFrame,
+                       useEntropy: Boolean = false): DataFrame =
+    weigh(pairs, profStats, numberOfBlocks, WeightType.values.toSeq, useEntropy)
+
+  /** One scheme's (p1, p2, cbs, entropy_sum, w1, w2) view of a wide
+   * weighted graph such as [[weightedPairsAll]]. */
   def schemeView(wide: DataFrame, wt: WeightType.Value): DataFrame = {
     val n = schemeName(wt)
     wide.select(col("p1"), col("p2"), col("cbs"), col("entropy_sum"),
       col(s"w1_$n").as("w1"), col(s"w2_$n").as("w2"))
-  }
-
-  /**
-   * Wide dirty-ER self-comparison weights: [[selfWeights]] for every scheme
-   * in one pass — (profile_id, w_cbs, ..., w_ejs). Shares the stats scan and
-   * the EJS degree aggregation across schemes the same way
-   * [[weightedPairsAll]] does for the real edges.
-   */
-  def selfWeightsAll(profStats: DataFrame, numberOfBlocks: DataFrame,
-                     pairs: DataFrame,
-                     useEntropy: Boolean = false,
-                     selfEntropies: Option[DataFrame] = None): DataFrame = {
-    var df = profStats.filter(col("nb_valid") > 0)
-      .select(col("profile_id"),
-        col("nb_valid").as("cbs"),
-        col("bp").as("bp_a"), col("bp").as("bp_b"),
-        col("nb_valid").as("nb_valid_a"), col("arcs_denom").as("arcs_denom_a"))
-      .crossJoin(numberOfBlocks)
-    df = selfEntropies match {
-      case Some(ent) => df.join(ent, Seq("profile_id"), "left")
-        .withColumn("entropy_sum", coalesce(col("entropy_sum"), lit(0.0)))
-      case None => df.withColumn("entropy_sum", lit(0.0))
-    }
-    val (degrees, total) = edgeStatistics(pairs)
-    df = df.join(degrees.select(col("p").as("profile_id"),
-        col("degree").as("degree_a"), col("degree").as("degree_b")), Seq("profile_id"))
-      .crossJoin(total)
-    val wCols = WeightType.values.toSeq.map(wt =>
-      weightColumn(wt, useEntropy).as(s"w_${schemeName(wt)}"))
-    df.select(col("profile_id") +: wCols: _*)
-  }
-
-  /** One scheme's (profile_id, w) view of [[selfWeightsAll]]. */
-  def selfSchemeView(wide: DataFrame, wt: WeightType.Value): DataFrame =
-    wide.select(col("profile_id"), col(s"w_${schemeName(wt)}").as("w"))
-
-  /** weightColumn with the endpoint roles swapped (p2's perspective). */
-  private def swapWeight(wt: WeightType.Value, useEntropy: Boolean): Column = {
-    val cbs = col("cbs").cast("double")
-    val bpA = col("bp_b").cast("double") // a := p2
-    val bpB = col("bp_a").cast("double")
-    val nb = col("number_of_blocks").cast("double")
-    val ent = col("entropy_sum")
-    wt match {
-      case WeightType.CBS => cbs
-      case WeightType.JS =>
-        val js = cbs / (bpA + bpB - cbs); if (useEntropy) js * ent else js
-      case WeightType.ECBS =>
-        val e = cbs * log10(nb / bpA) * log10(nb / bpB)
-        if (useEntropy) e * ent else e
-      case WeightType.ChiSquare =>
-        val chi = chiSquare(cbs, bpB, bpA, nb)
-        if (useEntropy) chi * ent else chi
-      case WeightType.ARCS =>
-        val w = cbs / col("arcs_denom_b")
-        if (useEntropy) w * pow(ent, col("nb_valid_b").cast("double")) else w
-      case WeightType.EJS =>
-        val js = cbs / (bpA + bpB - cbs)
-        val e = col("number_of_edges")
-        val degB = col("degree_a").cast("double") // neighbor of p2 is p1
-        val epA = col("degree_b").cast("double") + lit(EjsEps)
-        val inner = log10(e / epA)
-        val raw =
-          if (useEntropy) (js * ent) * log10(e / degB * inner)
-          else js * log10(e / (degB * inner))
-        when(e <= 0.0 || inner <= 0.0, lit(0.0)).otherwise(raw)
-    }
   }
 
   /** Directed view of the weighted graph: each undirected pair contributes
@@ -346,6 +260,35 @@ object MetaBlocking {
   def directedEdges(weighted: DataFrame): DataFrame =
     weighted.select(col("p1").as("a"), col("p2").as("b"), col("w1").as("w"))
       .union(weighted.select(col("p2").as("a"), col("p1").as("b"), col("w2").as("w")))
+
+  /** The self-weight body for `schemes`: (profile_id, w_<s>, ...), see
+   * [[selfWeights]]. Joins the EJS degrees only when EJS is requested. */
+  private def weighSelf(profStats: DataFrame, numberOfBlocks: DataFrame,
+                        schemes: Seq[WeightType.Value], useEntropy: Boolean,
+                        selfEntropies: Option[DataFrame], pairs: Option[DataFrame]): DataFrame = {
+    val df = profStats.filter(col("nb_valid") > 0)
+      .select(col("profile_id"),
+        col("nb_valid").as("cbs"),
+        col("bp").as("bp_a"), col("bp").as("bp_b"),
+        col("nb_valid").as("nb_valid_a"), col("arcs_denom").as("arcs_denom_a"))
+      .crossJoin(numberOfBlocks)
+    val withEntropy = selfEntropies match {
+      case Some(ent) => df.join(ent, Seq("profile_id"), "left")
+        .withColumn("entropy_sum", coalesce(col("entropy_sum"), lit(0.0)))
+      case None => df.withColumn("entropy_sum", lit(0.0))
+    }
+    val withDegrees =
+      if (!schemes.contains(WeightType.EJS)) withEntropy
+      else {
+        val (degrees, total) = edgeStatistics(pairs.getOrElse(
+          sys.error("EJS self weights need the pair graph for degrees")))
+        withEntropy.join(degrees.select(col("p").as("profile_id"),
+            col("degree").as("degree_a"), col("degree").as("degree_b")), Seq("profile_id"))
+          .crossJoin(total)
+      }
+    withDegrees.select(col("profile_id") +: schemes.map(wt =>
+      weightColumn(wt, useEntropy).as(s"w_${schemeName(wt)}")): _*)
+  }
 
   /**
    * Self-comparison weights — a faithful DIRTY-ER reference quirk: every
@@ -359,44 +302,36 @@ object MetaBlocking {
    * slots. Clean ER is unaffected: get_all_neighbors returns only
    * other-source profiles (pruning_utils.py:29-53), which excludes self.
    *
-   * Returns (profile_id, w) computed via the SAME weightColumn as real
-   * edges (bit-identical arithmetic): cbs = nb_valid, both endpoint block
-   * counts = bp, degrees = the profile's own degree. `selfEntropies`
+   * Returns (profile_id, w) computed via the SAME [[weightColumn]] as real
+   * edges (bit-identical arithmetic): cbs = nb_valid, both endpoint
+   * block counts = bp, degrees = the profile's own degree. `selfEntropies`
    * supplies entropy_sum (sum of the profile's valid-block entropies) for
    * useEntropy schemes; EJS additionally needs `pairs` for the degrees.
    */
   def selfWeights(profStats: DataFrame, numberOfBlocks: DataFrame, wt: WeightType.Value,
                   useEntropy: Boolean = false,
                   selfEntropies: Option[DataFrame] = None,
-                  pairs: Option[DataFrame] = None): DataFrame = {
-    var df = profStats.filter(col("nb_valid") > 0)
-      .select(col("profile_id"),
-        col("nb_valid").as("cbs"),
-        col("bp").as("bp_a"), col("bp").as("bp_b"),
-        col("nb_valid").as("nb_valid_a"), col("arcs_denom").as("arcs_denom_a"))
-      .crossJoin(numberOfBlocks)
-    df = selfEntropies match {
-      case Some(ent) => df.join(ent, Seq("profile_id"), "left")
-        .withColumn("entropy_sum", coalesce(col("entropy_sum"), lit(0.0)))
-      case None => df.withColumn("entropy_sum", lit(0.0))
-    }
-    df =
-      if (wt == WeightType.EJS) {
-        val (degrees, total) = edgeStatistics(pairs.getOrElse(
-          sys.error("EJS self weights need the pair graph for degrees")))
-        df.join(degrees.select(col("p").as("profile_id"),
-            col("degree").as("degree_a"), col("degree").as("degree_b")), Seq("profile_id"))
-          .crossJoin(total)
-      } else
-        df.withColumn("degree_a", lit(0L)).withColumn("degree_b", lit(0L))
-          .withColumn("number_of_edges", lit(0.0))
-    df.withColumn("w", weightColumn(wt, useEntropy)).select("profile_id", "w")
-  }
+                  pairs: Option[DataFrame] = None): DataFrame =
+    selfSchemeView(weighSelf(profStats, numberOfBlocks, Seq(wt), useEntropy,
+      selfEntropies, pairs), wt)
 
-  /** Self edges as (a, b, w) rows with a == b, for unioning into the
-   * first_step=True directed views. */
-  private def selfDirected(selfW: DataFrame): DataFrame =
-    selfW.select(col("profile_id").as("a"), col("profile_id").as("b"), col("w"))
+  /** Every scheme's self weights in one pass: (profile_id, w_cbs, ..., w_ejs). */
+  def selfWeightsAll(profStats: DataFrame, numberOfBlocks: DataFrame, pairs: DataFrame,
+                     useEntropy: Boolean = false,
+                     selfEntropies: Option[DataFrame] = None): DataFrame =
+    weighSelf(profStats, numberOfBlocks, WeightType.values.toSeq, useEntropy,
+      selfEntropies, Some(pairs))
+
+  /** One scheme's (profile_id, w) view of [[selfWeightsAll]]. */
+  def selfSchemeView(wide: DataFrame, wt: WeightType.Value): DataFrame =
+    wide.select(col("profile_id"), col(s"w_${schemeName(wt)}").as("w"))
+
+  /** [[directedEdges]] plus, when `selfW` is given (dirty ER), each
+   * profile's self edge as an (a, a, w) row: the neighbors every
+   * first_step=True pass enumerates (see [[selfWeights]]). */
+  private def directedWithSelf(weighted: DataFrame, selfW: Option[DataFrame]): DataFrame =
+    selfW.foldLeft(directedEdges(weighted))((d, sw) =>
+      d.union(sw.select(col("profile_id").as("a"), col("profile_id").as("b"), col("w"))))
 
   /** Per-profile local thresholds (python/sparker/wnp.py:192-229): AVG =
    * mean of incident directed weights, MaxFract2 = max / 2. `selfW` (dirty
@@ -408,11 +343,7 @@ object MetaBlocking {
       case ThresholdType.AVG => (sum(col("w")) / count(lit(1))).as("theta")
       case ThresholdType.MaxFract2 => (max(col("w")) / 2.0).as("theta")
     }
-    val directed = selfW match {
-      case Some(sw) => directedEdges(weighted).union(selfDirected(sw))
-      case None => directedEdges(weighted)
-    }
-    directed.groupBy(col("a").as("profile_id")).agg(agg)
+    directedWithSelf(weighted, selfW).groupBy(col("a").as("profile_id")).agg(agg)
   }
 
   /**
@@ -453,11 +384,7 @@ object MetaBlocking {
    * first_step=True): threshold = (sum w + sum w_self) / (2E + N). */
   def wep(weighted: DataFrame, eps: Double = 0.0,
           selfW: Option[DataFrame] = None): DataFrame = {
-    val directed = selfW match {
-      case Some(sw) => directedEdges(weighted).union(selfDirected(sw))
-      case None => directedEdges(weighted)
-    }
-    val thr = directed.agg((sum(col("w")) / count(lit(1))).as("gthr"))
+    val thr = directedWithSelf(weighted, selfW).agg((sum(col("w")) / count(lit(1))).as("gthr"))
     weighted.crossJoin(thr).filter(col("w1") >= col("gthr") - eps)
       .select(col("p1"), col("p2"), col("w1").as("w"))
   }
@@ -572,18 +499,14 @@ object MetaBlocking {
     // ranks the profile's SELF edge among its neighbors, so a high self
     // weight consumes one of the k slots (see selfWeights); the (p, p) row
     // can never match a real p1<p2 edge in the retention join below.
-    val directed = directedOpt.getOrElse(selfW match {
-      case Some(sw) => directedEdges(weighted).union(selfDirected(sw))
-      case None => directedEdges(weighted)
-    })
-    val retained = directed
+    val retained = directedOpt.getOrElse(directedWithSelf(weighted, selfW))
       .withColumn("rn", row_number().over(Window.partitionBy("a").orderBy(col("w").desc, col("b").asc)))
       .filter(col("rn") <= lit(k))
       .select(col("a"), col("b"))
     // Survivor pairs derived from the SMALL retained relation alone (<= k
     // rows per node), then ONE semi-join back onto the O(edges) weighted
     // graph — instead of two consecutive left joins over it (guide §3;
-    // the reciprocalBestMatch posture). `directed` holds both orientations
+    // the reciprocalBestMatch posture). The directed view holds both orientations
     // of every p1<p2 edge (plus a==b self rows that can never match a real
     // edge), so OR-survival is the canonicalized distinct of retained and
     // AND-survival is a retained-with-its-swap intersection.

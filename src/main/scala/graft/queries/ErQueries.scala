@@ -71,10 +71,11 @@ object ErQueries {
       cleaned(spark, dir, clean).profileStats)
 
   /** The WIDE weighted graph — all six schemes in one pass over the cached
-   * pair graph, ONE snapshot (MetaBlocking.weightedPairsAll). Per-scheme
-   * graphs are column selects over it: at 100 TB that's one shuffle over
-   * the O(edges) graph instead of six, and here it collapses six snapshot
-   * write+read round-trips into one. */
+   * pair graph, ONE snapshot (MetaBlocking.weightedPairsAll: the same
+   * weighting body as the one-scheme MetaBlocking.weightedPairs, asked for
+   * every scheme). Per-scheme graphs are column selects over it: at 100 TB
+   * that's one shuffle over the O(edges) graph instead of six, and here it
+   * collapses six snapshot write+read round-trips into one. */
   def wideWeighted(s: SparkSession, d: String, clean: Boolean): DataFrame =
     memo.frame(s, ("wide_weighted", d, clean))(
       MetaBlocking.weightedPairsAll(cachedPairs(s, d, clean),

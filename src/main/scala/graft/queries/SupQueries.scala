@@ -79,7 +79,10 @@ object SupQueries {
   /** The reference's real workflow: LR trained on the labeled features,
    * pruning driven by its probabilities (Generalized Supervised
    * Meta-blocking notebook). LBFGS isn't bit-reproducible in SQL, so this
-   * path gets a rows-only driver check, not a hash oracle. */
+   * path gets a rows-only driver check, not a hash oracle. On the bundled
+   * sf0.001 tables [[features]] has 12 rows and none with `is_match = 1`,
+   * so the model fitted there is constant; SupSpec's holdout-AUC spec is
+   * the check that training works. */
   def mlScored(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("ml_scored", d))(SupervisedMB.mlScore(features(s, d)))
 
@@ -90,22 +93,16 @@ object SupQueries {
    * cleaned blocks -> entropy-weighted chi2 pairs), snapshot once per dir. */
   def blastWeighted(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("blast_weighted", d)) {
-      def t[A](name: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[blast] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        r
-      }
       val attrs = ErQueries.partAttrs(s, d, twoSources = true)
-      val keysEnt = t("cluster_keys")(
-        graft.util.Snapshot(AttributeClustering.clusterKeys(attrs, clusters(s, d))))
-      val cbChk = t("clean_blocks")(Pipeline.cleanBlocks(
+      val keysEnt =
+        graft.util.Snapshot(AttributeClustering.clusterKeys(attrs, clusters(s, d)))
+      val cbChk = Pipeline.cleanBlocks(
         keysEnt.select("profile_id", "source_id", "key"), clean = true,
-        ErQueries.Smooth, ErQueries.FilterR, stage = graft.util.Snapshot.apply))
+        ErQueries.Smooth, ErQueries.FilterR, stage = graft.util.Snapshot.apply)
       val blockEnt = keysEnt.select("key", "entropy").distinct()
         .groupBy("key").agg(max(col("entropy")).as("entropy"))
-      val pairsSnap = t("pairs")(graft.util.Snapshot(cbChk.pairs(Some(blockEnt))))
-      val statsSnap = t("profile_stats")(graft.util.Snapshot(cbChk.profileStats))
+      val pairsSnap = graft.util.Snapshot(cbChk.pairs(Some(blockEnt)))
+      val statsSnap = graft.util.Snapshot(cbChk.profileStats)
       MetaBlocking.weightedPairs(pairsSnap, statsSnap, cbChk.numberOfBlocks,
         WeightType.ChiSquare, useEntropy = true)
     }

@@ -51,9 +51,7 @@ object Bucketed {
       val base = s.conf.getOption("spark.graft.checkpoint.dir").getOrElse {
         require(s.sparkContext.isLocal,
           "Bucketed: set spark.graft.checkpoint.dir to shared storage on a cluster")
-        s.conf.getOption("spark.local.dir")
-          .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-          .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
+        graft.util.Cleanup.localDir(s)
       }
       val path = s"$base/graft-bucketed/$tbl"
       graft.util.Cleanup.onExitDelete(path)

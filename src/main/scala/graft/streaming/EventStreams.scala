@@ -115,6 +115,10 @@ object EventStreams {
     d.toString
   }
 
+  /** Largest drained result, in rows, that [[drainAvailableNow]] returns as
+   * a LocalRelation. */
+  private val LocalResultMaxRows = 10000
+
   /** Drain a streaming frame with AvailableNow through a uniquely-named
    * memory sink and return the result as a LOCAL relation: the memory
    * sink already holds every emitted row on the driver, so the rows are
@@ -132,8 +136,8 @@ object EventStreams {
    * external-Row → InternalRow conversion per downstream action, which
    * for LARGE results loses to the parallel parquet round-trip it
    * replaced (measured: er_incremental_stream, 174k rows, 0.70x as a
-   * LocalRelation). Results above `spark.graft.stream.localResultMaxRows`
-   * (default 10000) keep the parquet Snapshot path. */
+   * LocalRelation). Results above [[LocalResultMaxRows]] rows keep the
+   * parquet Snapshot path. */
   private def drainAvailableNow(df: DataFrame, name0: String, mode: String): DataFrame = {
     val spark = df.sparkSession
     val name = s"${name0}_${System.nanoTime()}"
@@ -141,10 +145,7 @@ object EventStreams {
     // the default temp checkpoint lands in java.io.tmpdir on DISK, and the
     // state-store + WAL fsyncs there dominated the drain cost (the stateful
     // dedup paid ~14s for a 750-row result in r3).
-    val ckBase = spark.conf.getOption("spark.local.dir")
-      .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-      .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
-    val ck = s"$ckBase/graft-ck-$name"
+    val ck = s"${graft.util.Cleanup.localDir(spark)}/graft-ck-$name"
     graft.util.Cleanup.onExitDelete(ck)
     val profile = spark.conf.getOption("spark.graft.stream.profile")
       .orElse(sys.env.get("SPARK_GRAFT_STREAM_PROFILE")).contains("true")
@@ -169,12 +170,9 @@ object EventStreams {
           s"durationMs=${p.durationMs} state=${p.stateOperators.mkString(";")}"))
     try {
       val sink = spark.table(name)
-      val localMax = spark.conf
-        .getOption("spark.graft.stream.localResultMaxRows")
-        .map(_.toInt).getOrElse(10000)
       val rows = sink.collect()
       val result =
-        if (rows.length <= localMax)
+        if (rows.length <= LocalResultMaxRows)
           spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
         else graft.util.Snapshot(sink)
       if (profile) System.err.println(
@@ -1207,9 +1205,7 @@ object EventStreams {
       .filter(col("event_type") === "click")
       .select(col("user_id").as("c_uid"), col("ts").as("c_ts"),
         col("event_id").as("c_id")))
-    val base = spark.conf.getOption("spark.local.dir")
-      .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-      .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
+    val base = graft.util.Cleanup.localDir(spark)
     val tag = System.nanoTime()
     val outDir = s"$base/graft-asof-out-$tag"
     val ck = s"$base/graft-ck-asof-$tag"

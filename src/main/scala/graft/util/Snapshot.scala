@@ -116,9 +116,7 @@ object Snapshot {
         "Snapshot: set spark.graft.checkpoint.dir to a shared-storage path " +
           "(HDFS/S3/NFS) when running on a cluster; local-disk fallback is " +
           "only valid in local[*] mode")
-      spark.conf.getOption("spark.local.dir")
-        .orElse(sys.env.get("SPARK_LOCAL_DIRS"))
-        .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
+      Cleanup.localDir(spark)
     }
     val dir = s"$base/graft-snap-${java.util.UUID.randomUUID()}"
     // only the implicit tmpfs fallback is cleaned on exit; an explicitly

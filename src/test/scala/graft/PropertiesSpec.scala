@@ -148,25 +148,73 @@ class PropertiesSpec extends AnyFunSuite {
     }).sortBy(_.mkString(","))
 
   test("narrow weightedPairs / selfWeights equal the wide views bit for bit") {
-    for (seed <- 1 to 3) {
+    for (seed <- 1 to 3; useEntropy <- Seq(false, true)) {
       val cb = Pipeline.cleanBlocks(genKeys(seed), clean = false)
-      val pairs = graft.util.Snapshot(cb.pairs())
+      // seeded block entropies in (0, 2]; a profile's self entropy is the
+      // sum over its valid blocks
+      val blockEnt = if (!useEntropy) None else Some(graft.util.Snapshot(
+        cb.stats2.select(col("key"),
+          ((abs(hash(col("key"), lit(seed))) % 100 + 1) / 50.0).as("entropy"))))
+      val selfEnt = blockEnt.map(be => graft.util.Snapshot(cb.members2
+        .join(be, Seq("key")).groupBy("profile_id").agg(sum("entropy").as("entropy_sum"))))
+      val pairs = graft.util.Snapshot(cb.pairs(blockEnt))
       val pstats = graft.util.Snapshot(cb.profileStats)
       val wide = graft.util.Snapshot(
-        MetaBlocking.weightedPairsAll(pairs, pstats, cb.numberOfBlocks))
+        MetaBlocking.weightedPairsAll(pairs, pstats, cb.numberOfBlocks, useEntropy))
       val selfWide = graft.util.Snapshot(
-        MetaBlocking.selfWeightsAll(pstats, cb.numberOfBlocks, pairs))
+        MetaBlocking.selfWeightsAll(pstats, cb.numberOfBlocks, pairs, useEntropy, selfEnt))
+      // the same pairs with the endpoints swapped: its w1 is p2's view of
+      // the original edge, so it must equal the original w2
+      val flipped = pairs.select(col("p2").as("p1"), col("p1").as("p2"),
+        col("cbs"), col("entropy_sum"))
+      val tag = s"seed $seed, useEntropy $useEntropy"
       for (wt <- WeightType.values.toSeq) {
-        val narrow = exactRows(
-          MetaBlocking.weightedPairs(pairs, pstats, cb.numberOfBlocks, wt))
+        val narrow = exactRows(MetaBlocking.weightedPairs(pairs, pstats,
+          cb.numberOfBlocks, wt, useEntropy))
         assert(narrow.nonEmpty)
         assert(narrow == exactRows(MetaBlocking.schemeView(wide, wt)),
-          s"seed $seed: $wt weightedPairs differs from its wide view")
+          s"$tag: $wt weightedPairs differs from its wide view")
+        val p2View = exactRows(MetaBlocking.weightedPairs(flipped, pstats,
+          cb.numberOfBlocks, wt, useEntropy).select(col("p2").as("p1"), col("p1").as("p2"),
+          col("w1").as("w2")))
+        assert(p2View == exactRows(MetaBlocking.schemeView(wide, wt).select("p1", "p2", "w2")),
+          s"$tag: $wt w2 differs from w1 of the swapped pair")
         val self = exactRows(MetaBlocking.selfWeights(pstats,
-          cb.numberOfBlocks, wt, pairs = Some(pairs)))
+          cb.numberOfBlocks, wt, useEntropy, selfEnt, pairs = Some(pairs)))
         assert(self.nonEmpty)
         assert(self == exactRows(MetaBlocking.selfSchemeView(selfWide, wt)),
-          s"seed $seed: $wt selfWeights differs from its wide view")
+          s"$tag: $wt selfWeights differs from its wide view")
+      }
+    }
+  }
+
+  test("one-scheme weights join the EJS degree aggregate only for EJS") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val cb = Pipeline.cleanBlocks(genKeys(1), clean = false)
+    val pairs = graft.util.Snapshot(cb.pairs())
+    val pstats = graft.util.Snapshot(cb.profileStats)
+    val nb = graft.util.Snapshot(cb.numberOfBlocks)
+    // over snapshot inputs, every join and aggregate left in the plan is
+    // the weighting's own
+    def shape(df: DataFrame): (Int, Seq[String]) = {
+      val plan = df.queryExecution.optimizedPlan
+      (plan.collect { case j: Join => j }.size,
+        plan.collect { case a: Aggregate => a }.flatMap(_.aggregateExpressions.map(_.name)))
+    }
+    for (wt <- WeightType.values.toSeq; useEntropy <- Seq(false, true)) {
+      val (joins, aggs) = shape(MetaBlocking.weightedPairs(pairs, pstats, nb, wt, useEntropy))
+      val (selfJoins, selfAggs) = shape(MetaBlocking.selfWeights(pstats, nb, wt, useEntropy,
+        pairs = Some(pairs)))
+      if (wt == WeightType.EJS) {
+        // the optimizer names the degree aggregate after its join alias
+        assert(joins == 6 && aggs.exists(_.startsWith("degree")) &&
+          aggs.contains("number_of_edges"), s"EJS: $joins joins, aggregates $aggs")
+        assert(selfJoins == 3 && selfAggs.exists(_.startsWith("degree")),
+          s"EJS self: $selfJoins joins, aggregates $selfAggs")
+      } else {
+        // two stats joins and the number_of_blocks cross join
+        assert(joins == 3 && aggs.isEmpty, s"$wt: $joins joins, aggregates $aggs")
+        assert(selfJoins == 1 && selfAggs.isEmpty, s"$wt self: $selfJoins joins, $selfAggs")
       }
     }
   }
