@@ -516,6 +516,15 @@ object Dedup {
       .select(col("doc_id"), fingerprint.as("simhash"))
   }
 
+  /** The four 16-bit bands of the 64-bit fingerprint column `hash`: one
+   * row per (input row, band), with `band` (0-3) and `band_val` appended.
+   * The band keys of [[simhashPairs]] and of the streaming banded ingest
+   * gates ([[graft.streaming.EventStreams.dhashIngestStreaming]]). */
+  def simhashBands(fp: DataFrame, hash: String): DataFrame =
+    fp.select(col("*"), explode(sequence(lit(0), lit(3))).as("band"))
+      .withColumn("band_val",
+        expr(s"shiftright($hash, cast(band * 16 as int)) & 65535"))
+
   /**
    * SimHash near-dup pairs with Hamming distance <= maxDist: candidates
    * share at least one of four 16-bit bands (pigeonhole guarantees recall
@@ -528,10 +537,7 @@ object Dedup {
     // both sides of the band self-join read it; `materialized = true` when
     // fp0 is already parquet-backed (the per-dir fingerprint memos)
     val fp = if (materialized) fp0 else graft.util.Snapshot(fp0)
-    val banded = fp.select(col("doc_id"), col("simhash"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("band_val",
-        expr("shiftright(simhash, cast(band * 16 as int)) & 65535"))
+    val banded = simhashBands(fp.select("doc_id", "simhash"), "simhash")
     val a = banded.select(col("band"), col("band_val"),
       col("doc_id").as("d1"), col("simhash").as("f1"))
     val b = banded.select(col("band"), col("band_val"),

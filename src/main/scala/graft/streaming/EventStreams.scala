@@ -1,74 +1,100 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
+import graft.multimodal.Multimodal
 import graft.util.Memo
 
 /**
- * Structured Streaming surface over the `events` table. The reference has
+ * Structured Streaming surface over the engine's tables. The reference has
  * no streaming operators (SURVEY.md §2.11); this is the engine's forward
  * surface for incremental pipelines: the same windowed aggregations a
  * batch query computes, expressed as a stream with watermarks so state is
  * bounded and late data is handled, runnable with Trigger.AvailableNow for
  * deterministic batch-equivalent results (which is also how the DuckDB
  * oracle checks them).
+ *
+ * Every `*Streaming` drain opens its source through [[streamSource]], so
+ * the source contract is stated here once:
+ *  - the stream runs in one cached clone of the caller's session per
+ *    SparkContext, with [[StreamPartitions]] shuffle/state partitions;
+ *  - the declared schema is the table's parquet schema, read once per path;
+ *  - the file-stream source reads a temp dir that symlinks the table;
+ *  - `spark.graft.stream.maxFilesPerTrigger`, when set on the caller's
+ *    session, bounds the files per micro-batch, so an AvailableNow drain
+ *    of a pre-split table runs several batches (MultiBatchStreamSpec);
+ *  - a `ts` stored as TIMESTAMP(NANOS) is rebuilt as a microsecond
+ *    timestamp by [[microTs]], the conversion [[loadEvents]] also uses.
+ * With every file in one micro-batch, a drain's result equals its batch
+ * twin, which is the DuckDB oracle.
+ *
+ * `oneBatch` drains ignore the files-per-trigger bound and read the whole
+ * table in one micro-batch, because their batch equality needs it:
+ *  - [[dedupWithinWatermarkStreaming]]: expiry uses the previous batch's
+ *    watermark, so only one batch drops every in-table duplicate;
+ *  - [[funnelJoinStreaming]] (stream-stream join) and
+ *    [[sessionWindowStreaming]] (session windows): rows of a later batch
+ *    behind the watermark would be dropped as late data;
+ *  - [[sessionizeStreaming]]: its 1-second watermark and end-of-data
+ *    sentinel are only sound when the table and the sentinel arrive
+ *    together;
+ *  - the ingest gates [[tokenBlockingStreaming]],
+ *    [[incrementalBlockingStreaming]], [[pqEncodeStreaming]] and
+ *    [[lshIngestStreaming]], whose oracle checks are stated for one batch.
+ * Every other drain is stateless or merges its state across batches.
  */
 object EventStreams {
 
-  /**
-   * Load the events table. The driver writes TIMESTAMP(NANOS) parquet,
-   * which Spark only reads via the nanosAsLong legacy conf — so read the
-   * nanos as long and rebuild a microsecond timestamp with INTEGER
-   * division (`div`; `/` would go through double and lose precision above
-   * 2^53 ns). Source ns values are whole microseconds, so this is exact.
-   */
+  /** Load the events table, `ts` rebuilt by [[microTs]]. */
   def loadEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw
+    microTs(spark.read.parquet(s"$dir/events.parquet"))
   }
 
-  /**
-   * Session clone for streaming queries with its own shuffle-partition
-   * setting (`spark.graft.stream.partitions`, default 8): stateful
-   * streaming cost scales with the partition count — one state store,
-   * commit, and task per partition per micro-batch — and the batch
-   * engine's wide-cluster default (32 here) is pure fixed overhead for
-   * the drain harness. A production deployment sizes this to its state
-   * volume; the conf is the knob.
-   */
-  private val streamSessions =
-    new Memo[(org.apache.spark.SparkContext, String, Option[String]), SparkSession]
+  /** The driver writes TIMESTAMP(NANOS) parquet, which Spark only reads via
+   * the nanosAsLong legacy conf — so a `ts` read as long nanos is rebuilt
+   * as a microsecond timestamp with INTEGER division (`div`; `/` would go
+   * through double and lose precision above 2^53 ns). Source ns values
+   * are whole microseconds, so this is exact. */
+  private def microTs(df: DataFrame): DataFrame =
+    if (nanosTs(df.schema)) df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    else df
 
-  private def streamSession(spark: SparkSession): SparkSession = {
-    // ONE cached clone per (SparkContext, conf combo): building a fresh
-    // SessionState — analyzer, catalog, extensions — per drain is pure
-    // overhead. Keying by the two caller-tunable confs (instead of
-    // re-syncing a single shared clone) keeps every cached session
-    // immutable after construction, so concurrent drains — including
-    // parallel test suites that flip maxFilesPerTrigger — can never
-    // observe another caller's settings. Sink names are unique and
-    // streaming queries are independent, so sharing a session is safe.
-    val n = spark.conf.getOption("spark.graft.stream.partitions").getOrElse("8")
-    val mft = spark.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
-    streamSessions((spark.sparkContext, n, mft)) {
+  /** Whether the table stores `ts` as long nanos (read under nanosAsLong). */
+  private def nanosTs(schema: StructType): Boolean =
+    schema.exists(f => f.name == "ts" && f.dataType == LongType)
+
+  /** Shuffle/state partitions of every streaming query: stateful streaming
+   * cost scales with the partition count — one state store, commit, and
+   * task per partition per micro-batch — and the batch engine's
+   * wide-cluster default (32 here) is pure fixed overhead for the drain
+   * harness. */
+  private val StreamPartitions = 8
+
+  private val streamSessions = new Memo[org.apache.spark.SparkContext, SparkSession]
+
+  /** ONE cached clone per SparkContext: building a fresh SessionState —
+   * analyzer, catalog, extensions — per drain is pure overhead. The clone
+   * is never changed after construction (the files-per-trigger bound is a
+   * reader option taken from the caller's session per drain), so
+   * concurrent drains can share it; sink names are unique and streaming
+   * queries are independent. */
+  private def streamSession(spark: SparkSession): SparkSession =
+    streamSessions(spark.sparkContext) {
       val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", n)
+      s.conf.set("spark.sql.shuffle.partitions", StreamPartitions.toString)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      mft.foreach(v => s.conf.set("spark.graft.stream.maxFilesPerTrigger", v))
       s
     }
-  }
 
   /** Parquet schema per table path, cached after the first read: every
    * drain needs the batch schema to declare its readStream source, and
    * re-inferring it per run re-lists the directory and re-reads a footer
    * on the driver. Pure metadata — the driver's tables are immutable for
    * a session, and nothing about query RESULTS is cached here. */
-  private val schemas = new Memo[String, org.apache.spark.sql.types.StructType]
+  private val schemas = new Memo[String, StructType]
   private def tableSchema(spark: SparkSession, path: String) =
     schemas(path)(spark.read.parquet(path).schema)
 
@@ -78,30 +104,14 @@ object EventStreams {
    * session (see [[graft.util.Memo]]). */
   private val indexes = new Memo[Product, Memo.Frame]
 
-  /** Streaming parquet reader honoring the source-rate knob
-   * (`spark.graft.stream.maxFilesPerTrigger`): bounding files-per-batch
-   * splits an AvailableNow drain into MULTIPLE micro-batches, which is
-   * how MultiBatchStreamSpec proves state genuinely evolves across
-   * batches (not the degenerate single-batch equality). Operators whose
-   * oracle semantics REQUIRE one batch (watermark-expiry dedup, the
-   * stream-stream joins, session windows) pin
-   * `.option("maxFilesPerTrigger", Int.MaxValue)` after this call, which
-   * takes precedence. */
-  private def reader(spark: SparkSession,
-                     schema: org.apache.spark.sql.types.StructType) = {
-    val r = spark.readStream.schema(schema)
-    spark.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
-      .fold(r)(v => r.option("maxFilesPerTrigger", v))
-  }
-
-  /** Temp dir holding a symlink to the events file — the file-stream
-   * source only accepts directories. Recursively deleted on JVM exit
-   * (deleteOnExit would silently no-op: the dir is never empty). */
-  private def streamDirFor(dir: String, prefix: String,
-                           file: String = "events.parquet"): String = {
+  /** Temp dir holding a symlink to `<dir>/<table>.parquet` — the
+   * file-stream source only accepts directories. Recursively deleted on
+   * JVM exit (deleteOnExit would silently no-op: the dir is never empty). */
+  private def streamDirFor(dir: String, table: String): String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val d = Files.createTempDirectory(prefix)
+    val file = s"$table.parquet"
+    val d = Files.createTempDirectory(s"${table}_stream_")
     val src = Paths.get(s"$dir/$file")
     if (Files.isDirectory(src)) {
       // a pre-split table (the multi-batch spec): the file-stream source
@@ -113,6 +123,24 @@ object EventStreams {
     } else Files.createSymbolicLink(d.resolve(file), src)
     graft.util.Cleanup.onExitDelete(d.toString)
     d.toString
+  }
+
+  /** The streaming source of `<dir>/<table>.parquet` under the contract of
+   * the object scaladoc; `oneBatch` as listed there. `seed` rows (with a
+   * timestamp `ts`) are written into the stream dir first, in the table's
+   * stored `ts` form. */
+  private def streamSource(spark0: SparkSession, dir: String,
+                           table: String = "events", oneBatch: Boolean = false,
+                           seed: Option[DataFrame] = None): DataFrame = {
+    val spark = streamSession(spark0)
+    val schema = tableSchema(spark, s"$dir/$table.parquet")
+    val src = streamDirFor(dir, table)
+    seed.map(s => if (nanosTs(schema)) s.withColumn("ts", unix_micros(col("ts")) * 1000L) else s)
+      .foreach(_.write.mode("append").parquet(src))
+    val r = spark.readStream.schema(schema)
+    val maxFiles =
+      if (oneBatch) None else spark0.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
+    microTs(maxFiles.fold(r)(v => r.option("maxFilesPerTrigger", v)).parquet(src))
   }
 
   /** Largest drained result, in rows, that [[drainAvailableNow]] returns as
@@ -191,52 +219,27 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), (sum(graft.functions.FastRound.round(col("value") * 100, 0).cast("long")) / 100.0).as("value_sum"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("value_sum"))
 
-  /**
-   * The same aggregate executed as a Structured Stream from the parquet
-   * directory with a 2-hour watermark, drained with AvailableNow into a
-   * memory sink, returned as a DataFrame. Demonstrates the
-   * readStream -> watermark -> window -> writeStream path; with all data
-   * on disk the result equals the batch form.
-   */
-  def windowedAggStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema).parquet(streamDirFor(dir, "events_stream_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val agg = stream
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), (sum(graft.functions.FastRound.round(col("value") * 100, 0).cast("long")) / 100.0).as("value_sum"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("value_sum"))
-    drainAvailableNow(agg, "events_windowed", "complete")
-  }
+  /** [[windowedAggBatch]] over the stream with a 2-hour watermark — the
+   * readStream -> watermark -> window -> writeStream path, drained in
+   * complete mode. */
+  def windowedAggStreaming(spark: SparkSession, dir: String): DataFrame =
+    drainAvailableNow(
+      windowedAggBatch(streamSource(spark, dir).withWatermark("ts", "2 hours")),
+      "events_windowed", "complete")
 
   /**
-   * Sessionization: split each user's event stream into sessions separated
-   * by gaps > `gapMinutes`. Batch form is the classic gaps-and-islands
-   * (lag + running sum) — fully windowed, no driver state; the streaming
-   * form of this shape would be flatMapGroupsWithState with a session
-   * timeout.
-   */
-  /**
    * Streaming exact dedup: the distinct (user_id, event_type) pairs of the
-   * event stream via Structured Streaming's stateful `dropDuplicates`,
-   * drained with AvailableNow. Key-only projection keeps the state row
-   * minimal; for an unbounded production stream the variant is
-   * `dropDuplicatesWithinWatermark` (state bounded by the watermark) — the
-   * exact-distinct form here is what the batch oracle can reproduce.
+   * event stream via Structured Streaming's stateful `dropDuplicates`.
+   * Key-only projection keeps the state row minimal; for an unbounded
+   * production stream the variant is `dropDuplicatesWithinWatermark`
+   * (state bounded by the watermark) — the exact-distinct form here is
+   * what the batch oracle can reproduce.
    */
-  def distinctPairsStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val dedup = reader(spark, schema).parquet(streamDirFor(dir, "events_dedup_"))
-      .select("user_id", "event_type")
-      .dropDuplicates("user_id", "event_type")
-    drainAvailableNow(dedup, "events_dedup", "append")
-  }
+  def distinctPairsStreaming(spark: SparkSession, dir: String): DataFrame =
+    drainAvailableNow(
+      streamSource(spark, dir).select("user_id", "event_type")
+        .dropDuplicates("user_id", "event_type"),
+      "events_dedup", "append")
 
   /**
    * PRODUCTION-shaped streaming dedup: `dropDuplicatesWithinWatermark` —
@@ -246,25 +249,15 @@ object EventStreams {
    * exact-distinct form keeps every key forever — fine for a drain
    * harness, unbounded on a real stream).
    *
-   * Determinism/oracle: the whole table arrives in one AvailableNow batch
-   * (maxFilesPerTrigger pinned), and expiry uses the PREVIOUS batch's
+   * Determinism/oracle: in one batch, expiry uses the PREVIOUS batch's
    * watermark (initially -inf), so no state expires mid-batch and every
    * in-batch duplicate is dropped regardless of time gaps — the emitted
    * key set equals batch DISTINCT, which is the DuckDB twin. Keys here are
    * derived (event_type, event day): watermark-compatible dedup on a
    * projected dimension, not just raw columns.
    */
-  def dedupWithinWatermarkStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "events_dedup_wm_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val dedup = stream
+  def dedupWithinWatermarkStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val dedup = streamSource(spark, dir, oneBatch = true)
       .withWatermark("ts", "1 hour")
       .withColumn("event_day", to_date(col("ts")))
       .dropDuplicatesWithinWatermark("event_type", "event_day")
@@ -285,16 +278,12 @@ object EventStreams {
    * state grows with the key universe (drain-harness posture, same as
    * [[distinctPairsStreaming]]); an unbounded deployment would bound it
    * with `dropDuplicatesWithinWatermark` on an arrival-time column.
-   * With AvailableNow + a single batch the emitted pairs equal batch
-   * token blocking, so the batch SQL is the oracle.
+   * The emitted pairs equal batch token blocking, so the batch SQL is the
+   * oracle.
    */
-  def tokenBlockingStreaming(spark0: SparkSession, dir: String,
+  def tokenBlockingStreaming(spark: SparkSession, dir: String,
                              attrsOf: DataFrame => DataFrame): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/part.parquet")
-    val parts = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "part_tokens_", "part.parquet"))
+    val parts = streamSource(spark, dir, "part", oneBatch = true)
     val keys = graft.er.Blocking.tokenKeys(attrsOf(parts))
       .select("profile_id", "key")
     drainAvailableNow(keys, "er_tokens_stream", "append")
@@ -345,19 +334,16 @@ object EventStreams {
    *    batch belong to the periodic batch compaction pass, exactly like
    *    [[lshIngestStreaming]]'s new-new convention.
    *
-   * AvailableNow + one batch => the emitted pairs equal the batch
-   * new-vs-capped-corpus join, which is the DuckDB oracle.
+   * The emitted pairs equal the batch new-vs-capped-corpus join, which is
+   * the DuckDB oracle.
    */
   def incrementalBlockingStreaming(spark0: SparkSession, dir: String,
                                    attrsOf: DataFrame => DataFrame,
                                    maxBlockSize: Long = 1000L): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/part.parquet")
-    val corpusIdx = incrementalCorpusIndex(spark, dir, attrsOf, maxBlockSize)
-    val newParts = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "part_incr_", "part.parquet"))
+    val newParts = streamSource(spark0, dir, "part", oneBatch = true)
       .filter(col("p_partkey") % 10 === 0)
+    val corpusIdx =
+      incrementalCorpusIndex(newParts.sparkSession, dir, attrsOf, maxBlockSize)
     val pairs = graft.er.Blocking.tokenKeys(attrsOf(newParts))
       .select(col("key"), col("profile_id").as("new_id"))
       .join(corpusIdx, Seq("key"))
@@ -367,6 +353,19 @@ object EventStreams {
       .dropDuplicates("p1", "p2")
     drainAvailableNow(pairs, "er_incremental_stream", "append")
   }
+
+  /** The standing corpus LSH band index (band, band_val, corpus_id) for
+   * `dir`, built ONCE per source dir — the production posture: the index
+   * over the standing 90% is a maintained artifact the ingest gate
+   * probes, not something recomputed from text on every micro-batch (r5's
+   * bench measured index rebuild, not ingest). [[graft.queries.Warmup]]
+   * calls this so the first benched ingest doesn't pay index
+   * construction. */
+  def lshCorpusIndex(spark: SparkSession, dir: String): DataFrame =
+    indexes.frame(spark, ("lsh_corpus", dir))(
+      graft.dedup.Dedup.minhashBandKeys(
+          spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 10 =!= 0))
+        .select(col("band"), col("band_val"), col("doc_id").as("corpus_id")))
 
   /**
    * Streaming near-dup ingest — MinHash-LSH as a Structured Stream: new
@@ -386,24 +385,19 @@ object EventStreams {
    * `dropDuplicatesWithinWatermark` on arrival time when the stream is
    * unbounded). New-new duplicates inside one batch are left to the
    * periodic batch compaction pass ([[graft.dedup.Dedup.minhashLsh]]);
-   * this gate's contract is new-vs-corpus.
-   *
-   * AvailableNow + single batch => the emitted pairs equal the batch
+   * this gate's contract is new-vs-corpus, and its pairs equal the batch
    * band-key join, which is the DuckDB oracle.
    */
-
-  /** The standing corpus LSH band index (band, band_val, corpus_id) for
-   * `dir`, built ONCE per source dir — the production posture: the index
-   * over the standing 90% is a maintained artifact the ingest gate
-   * probes, not something recomputed from text on every micro-batch (r5's
-   * bench measured index rebuild, not ingest). [[graft.queries.Warmup]]
-   * calls this so the first benched ingest doesn't pay index
-   * construction. */
-  def lshCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    indexes.frame(spark, ("lsh_corpus", dir))(
-      graft.dedup.Dedup.minhashBandKeys(
-          spark.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") % 10 =!= 0))
-        .select(col("band"), col("band_val"), col("doc_id").as("corpus_id")))
+  def lshIngestStreaming(spark0: SparkSession, dir: String): DataFrame = {
+    val newDocs = streamSource(spark0, dir, "documents", oneBatch = true)
+      .filter(col("doc_id") % 10 === 0)
+    val pairs = graft.dedup.Dedup.minhashBandKeys(newDocs)
+      .withColumnRenamed("doc_id", "new_id")
+      .join(lshCorpusIndex(newDocs.sparkSession, dir), Seq("band", "band_val"))
+      .select("new_id", "corpus_id")
+      .dropDuplicates("new_id", "corpus_id")
+    drainAvailableNow(pairs, "dedup_lsh_stream", "append")
+  }
 
   /**
    * Streaming PQ encode — new embedding vectors (vec_id % 10 == 0, the
@@ -413,19 +407,14 @@ object EventStreams {
    * model rides in the task binaries
    * ([[graft.similarity.ProductQuantization.encodeWith]]), so the
    * stream side is a pure stateless projection — no stream-static join,
-   * no state store, nothing to watermark. AvailableNow + one batch =>
-   * the emitted codes equal the batch encode of the same subset, which
-   * is the DuckDB oracle (the full code-table twin filtered to the
-   * arriving ids).
+   * no state store, nothing to watermark. The emitted codes equal the
+   * batch encode of the same subset, which is the DuckDB oracle (the full
+   * code-table twin filtered to the arriving ids).
    */
-  def pqEncodeStreaming(spark0: SparkSession, dir: String,
+  def pqEncodeStreaming(spark: SparkSession, dir: String,
                         model: graft.similarity.ProductQuantization.Model,
                         m: Int, subDim: Int): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/embeddings.parquet")
-    val vecs = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "embs_pq_", "embeddings.parquet"))
+    val vecs = streamSource(spark, dir, "embeddings", oneBatch = true)
       .filter(col("vec_id") % 10 === 0)
     val codes = graft.similarity.ProductQuantization
       .encodeWith(vecs, model, m, subDim)
@@ -451,19 +440,14 @@ object EventStreams {
    * no state store, no watermark, nothing buffered. The bounded per-doc
    * island merge then runs over the drained sink: the split a production
    * ingest uses (tag contaminated windows at wire speed; merge maximal
-   * spans in the compaction pass). AvailableNow + the full table in one
-   * batch ⇒ the merged spans equal the batch
+   * spans in the compaction pass). The merged spans equal the batch
    * [[graft.text.Curation.contaminatedSpans]], which is the DuckDB twin.
    */
   def deconSpansStreaming(spark0: SparkSession, dir: String,
                           L: Int = 10): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/documents.parquet")
-    val benchIdx = deconGramIndex(spark, dir, L)
-    val corpus = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "docs_decon_", "documents.parquet"))
+    val corpus = streamSource(spark0, dir, "documents")
       .filter(col("doc_id") % 50 =!= 0)
+    val benchIdx = deconGramIndex(corpus.sparkSession, dir, L)
     val marked = graft.text.Curation.slidingGrams(
         graft.text.Curation.tokenArr(corpus, "text", "doc_id"), L)
       .join(broadcast(benchIdx), Seq("gram"), "left_semi")
@@ -518,12 +502,9 @@ object EventStreams {
    */
   def substrGateStreaming(spark0: SparkSession, dir: String,
                           L: Int = 30): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/documents.parquet")
-    val idx = substrRepeatedIndex(spark, dir, L)
-    val stream = reader(spark, schema)
-      .parquet(streamDirFor(dir, "docs_substr_", "documents.parquet"))
+    val stream = streamSource(spark0, dir, "documents")
       .filter(col("doc_id") % 10 === 0)
+    val idx = substrRepeatedIndex(stream.sparkSession, dir, L)
     // the same codegen'd O(n) rolling hash the standing index was built
     // with (graft.functions.WindowHashes64) — digests must agree across
     // the index and the probe, and the stream pays this explode per drain
@@ -548,21 +529,19 @@ object EventStreams {
    * ([[graft.text.Curation.qualityThresholds]] — the distributed exact
    * percentile, snapshotted once), incoming documents scored as a
    * stateless stream-static broadcast join — no state store, the stream
-   * filters at projection speed. Draining the whole table in one
-   * AvailableNow batch equals the batch gate
+   * filters at projection speed. The drained result equals the batch gate
    * ([[graft.text.Curation.qualityGate]]), which is the DuckDB twin.
    */
   def qualityGateStreaming(spark0: SparkSession, dir: String,
                            p: Double = 0.25): DataFrame = {
-    val spark = streamSession(spark0)
+    val stream = streamSource(spark0, dir, "documents")
+    val spark = stream.sparkSession
     // the trained artifact is a property of the STANDING corpus — train
     // once per (dir, p) and memoize the snapshot (the dedup_lsh_stream
     // pattern), so each drain pays scoring + join, not re-training
     val th = indexes.frame(spark, ("quality_thresholds", dir, p))(
       graft.text.Curation.qualityThresholds(
         spark.read.parquet(s"$dir/documents.parquet"), p))
-    val stream = reader(spark, tableSchema(spark, s"$dir/documents.parquet"))
-      .parquet(streamDirFor(dir, "docs_qgate_", "documents.parquet"))
     drainAvailableNow(
       graft.text.Curation.qualityGateScore(stream, th),
       "txt_quality_filter_stream", "append")
@@ -577,18 +556,18 @@ object EventStreams {
    * `aggregate(toks, ...)` over the broadcast map, no token explode, no
    * per-doc shuffle, no state store: a 100 TB/day ingest scores at scan
    * speed. The per-token grains are the same exact BIGINTs the batch
-   * operator sums, so draining the whole candidate table in one
-   * AvailableNow pass equals [[graft.text.Curation.dsirWeights]] — the
-   * DuckDB twin. Precondition shared with that equality: `doc_id` is
-   * unique in the corpus (the batch operator merges duplicate ids into
-   * one row; this stateless gate scores each arriving row — exactly the
-   * right ingest semantics, but a corpus with duplicate ids would make
-   * the two differ by that grouping).
+   * operator sums, so the drained weights equal
+   * [[graft.text.Curation.dsirWeights]] — the DuckDB twin. Precondition
+   * shared with that equality: `doc_id` is unique in the corpus (the
+   * batch operator merges duplicate ids into one row; this stateless gate
+   * scores each arriving row — exactly the right ingest semantics, but a
+   * corpus with duplicate ids would make the two differ by that grouping).
    */
   private val DsirBuckets = 256
 
   def dsirGateStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
+    val source = streamSource(spark0, dir, "documents")
+    val spark = source.sparkSession
     val lr = indexes.frame(spark, ("dsir_log_ratios", dir)) {
       val standing = spark.read.parquet(s"$dir/documents.parquet")
       graft.text.Curation.dsirLogRatios(
@@ -597,8 +576,7 @@ object EventStreams {
     }
     val model = lr.agg(map_from_entries(collect_list(
         struct(col("bucket"), col("lr_g")))).as("lr_m"))
-    val stream = reader(spark, tableSchema(spark, s"$dir/documents.parquet"))
-      .parquet(streamDirFor(dir, "docs_dsir_", "documents.parquet"))
+    val stream = source
       .filter(col("source") =!= "src1")
       .withColumn("toks", filter(
         split(graft.dedup.Dedup.normalize(col("text")), " "),
@@ -613,149 +591,94 @@ object EventStreams {
     drainAvailableNow(scored, "txt_dsir_stream", "append")
   }
 
-  /** Standing banded dHash index of the BASE image corpus (4×16-bit band
-   * keys per image, the simhash-banding layout), materialized once per
-   * dir — the static side of the streaming image-ingest gate. Built
-   * through the REAL PPM decoder over the fixture corpus. */
+  /** One fingerprint modality of the banded near-dup ingest gates: the
+   * fixture payload per doc id (`perturb` = the arriving twin), the REAL
+   * decoder and its output schema, the decoded 64-bit hash column, and
+   * the drain's sink name. */
+  private case class Banded(hash: String, fixture: (Long, Boolean) => Array[Byte],
+                            decoder: (Long, Array[Byte]) => Row,
+                            schema: StructType, drain: String)
+
+  private val Image = Banded("dhash", Multimodal.ppmDhashFixture,
+    Multimodal.decodePpmDhash, Multimodal.DhashSchema, "mm_neardup_stream")
+  private val Audio = Banded("afp", Multimodal.wavFpFixture,
+    Multimodal.decodeWavAfp, Multimodal.AudioFpSchema, "mm_wav_neardup_stream")
+
+  /** Standing banded index (corpus_id, corpus_hash, band, band_val) of a
+   * modality's BASE corpus (4×16-bit band keys per item,
+   * [[graft.dedup.Dedup.simhashBands]]), built through the real decoder
+   * over the fixture corpus and materialized once per dir — the static
+   * side of the modality's ingest gate. */
+  private def bandedCorpusIndex(spark: SparkSession, dir: String, b: Banded): DataFrame =
+    indexes.frame(spark, (s"${b.hash}_corpus", dir)) {
+      import spark.implicits._
+      val fixture = b.fixture
+      val ids = spark.read.parquet(s"$dir/documents.parquet")
+        .select("doc_id").as[Long]
+      val fp = Multimodal.decodeFeatures(
+        ids.map(id => (id, fixture(id, false))).toDF("doc_id", "payload"),
+        parallelism = 8, decoder = b.decoder, schema = b.schema)
+      graft.dedup.Dedup.simhashBands(
+        fp.select(col("doc_id").as("corpus_id"), col(b.hash).as("corpus_hash")),
+        "corpus_hash")
+    }
+
+  /** Banded near-dup ingest gate of one modality: arriving items (the
+   * perturbed twins of the doc_id % 20 == 0 corpus rows, ids + 1e7) are
+   * fingerprinted through the real decoder and probe the standing
+   * [[bandedCorpusIndex]] via a broadcast join, with exact xor/bit_count
+   * verification — stateless except the pair dedup the LSH gate also
+   * carries. The decode runs as a per-row typed map here; a production
+   * deployment lifts it into foreachBatch for batched/native codecs — the
+   * gate shape (stream-static banded probe) is identical. Returns
+   * (new_id, corpus_id, hamming). */
+  private def bandedIngestStreaming(spark0: SparkSession, dir: String,
+                                    b: Banded): DataFrame = {
+    val arriving = streamSource(spark0, dir, "documents")
+      .filter(col("doc_id") % 20 === 0)
+    val spark = arriving.sparkSession
+    import spark.implicits._
+    val (fixture, decode) = (b.fixture, b.decoder)
+    val fps = arriving.select("doc_id").as[Long]
+      .map { id =>
+        val r = decode(id + 10000000L, fixture(id, true))
+        (r.getLong(0), r.getLong(1))
+      }.toDF("new_id", b.hash)
+    val pairs = graft.dedup.Dedup.simhashBands(fps, b.hash)
+      .join(broadcast(bandedCorpusIndex(spark, dir, b)), Seq("band", "band_val"))
+      .withColumn("hamming",
+        bit_count(col(b.hash).bitwiseXOR(col("corpus_hash"))))
+      .filter(col("hamming") <= 6)
+      .select(col("new_id"), col("corpus_id"), col("hamming"))
+      .dropDuplicates("new_id", "corpus_id")
+    drainAvailableNow(pairs, b.drain, "append")
+  }
+
+  /** [[bandedCorpusIndex]] of the BASE image corpus, dHash'd through the
+   * REAL PPM decoder. */
   def dhashCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    indexes.frame(spark, ("dhash_corpus", dir)) {
-      import spark.implicits._
-      val ids = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-      val fp = graft.multimodal.Multimodal.decodeFeatures(
-        ids.map(id => (id, graft.multimodal.Multimodal.ppmDhashFixture(id)))
-          .toDF("doc_id", "payload"),
-        parallelism = 8,
-        decoder = graft.multimodal.Multimodal.decodePpmDhash,
-        schema = graft.multimodal.Multimodal.DhashSchema)
-      fp.select(col("doc_id").as("corpus_id"),
-          col("dhash").as("corpus_hash"),
-          explode(sequence(lit(0), lit(3))).as("band"))
-        .withColumn("band_val",
-          expr("shiftright(corpus_hash, cast(band * 16 as int)) & 65535"))
-    }
+    bandedCorpusIndex(spark, dir, Image)
 
-  /**
-   * Streaming image-ingest near-dup gate — the visual twin of
-   * [[lshIngestStreaming]]: arriving re-encoded images (the perturbed
-   * twins of the doc_id % 20 == 0 corpus rows, ids + 1e7) are dHash'd
-   * through the REAL PPM decoder and probe the STANDING banded corpus
-   * index via a broadcast join, with exact xor/bit_count verification —
-   * stateless except the pair dedup the LSH gate also carries. The
-   * decode runs as a per-row typed map here; a production deployment
-   * lifts it into foreachBatch for batched/native codecs — the gate
-   * shape (stream-static banded probe) is identical. Draining the whole
-   * arrival set equals the batch [[graft.multimodal.Multimodal.dhashNearDupPairs]]
-   * restricted to (corpus, arriving) cross pairs — the DuckDB twin.
-   *
-   * Returns (new_id, corpus_id, hamming).
-   */
-  def dhashIngestStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val schema = tableSchema(spark, s"$dir/documents.parquet")
-    val idx = dhashCorpusIndex(spark, dir)
-    val fps = reader(spark, schema)
-      .parquet(streamDirFor(dir, "docs_mmdh_", "documents.parquet"))
-      .filter(col("doc_id") % 20 === 0)
-      .select("doc_id").as[Long]
-      .map { id =>
-        val r = graft.multimodal.Multimodal.decodePpmDhash(id + 10000000L,
-          graft.multimodal.Multimodal.ppmDhashFixture(id, perturb = true))
-        (r.getLong(0), r.getLong(1))
-      }.toDF("new_id", "dhash")
-    val banded = fps.select(col("new_id"), col("dhash"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("band_val",
-        expr("shiftright(dhash, cast(band * 16 as int)) & 65535"))
-    val pairs = banded.join(broadcast(idx), Seq("band", "band_val"))
-      .withColumn("hamming",
-        bit_count(col("dhash").bitwiseXOR(col("corpus_hash"))))
-      .filter(col("hamming") <= 6)
-      .select(col("new_id"), col("corpus_id"), col("hamming"))
-      .dropDuplicates("new_id", "corpus_id")
-    drainAvailableNow(pairs, "mm_neardup_stream", "append")
-  }
+  /** Streaming image-ingest near-dup gate — the visual twin of
+   * [[lshIngestStreaming]] ([[bandedIngestStreaming]] over re-encoded PPM
+   * images). Equals the batch
+   * [[graft.multimodal.Multimodal.dhashNearDupPairs]] restricted to
+   * (corpus, arriving) cross pairs — the DuckDB twin. */
+  def dhashIngestStreaming(spark: SparkSession, dir: String): DataFrame =
+    bandedIngestStreaming(spark, dir, Image)
 
-  /** Standing banded audio-fingerprint index of the BASE WAV corpus
-   * (4×16-bit band keys per clip, the simhash-banding layout),
-   * materialized once per dir — the static side of the streaming
-   * audio-ingest gate. Built through the REAL RIFF/PCM16 parser over
-   * the fixture corpus; the audio sibling of [[dhashCorpusIndex]]. */
+  /** [[bandedCorpusIndex]] of the BASE WAV corpus, envelope-fingerprinted
+   * through the REAL RIFF/PCM16 parser. */
   def afpCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    indexes.frame(spark, ("afp_corpus", dir)) {
-      import spark.implicits._
-      val ids = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-      val fp = graft.multimodal.Multimodal.decodeFeatures(
-        ids.map(id => (id, graft.multimodal.Multimodal.wavFpFixture(id)))
-          .toDF("doc_id", "payload"),
-        parallelism = 8,
-        decoder = graft.multimodal.Multimodal.decodeWavAfp,
-        schema = graft.multimodal.Multimodal.AudioFpSchema)
-      fp.select(col("doc_id").as("corpus_id"),
-          col("afp").as("corpus_hash"),
-          explode(sequence(lit(0), lit(3))).as("band"))
-        .withColumn("band_val",
-          expr("shiftright(corpus_hash, cast(band * 16 as int)) & 65535"))
-    }
+    bandedCorpusIndex(spark, dir, Audio)
 
-  /**
-   * Streaming audio-ingest near-dup gate — completes batch/stream
+  /** Streaming audio-ingest near-dup gate — completes batch/stream
    * symmetry across all three modalities (text [[lshIngestStreaming]],
-   * image [[dhashIngestStreaming]], audio here): arriving noise-
-   * perturbed WAV clips (the planted twins of the doc_id % 20 == 0
-   * corpus rows, ids + 1e7) are envelope-fingerprinted through the REAL
-   * RIFF/PCM16 parser and probe the STANDING banded corpus index via a
-   * broadcast join, with exact xor/bit_count verification — stateless
-   * except the pair dedup. Draining the whole arrival set equals the
-   * batch [[graft.multimodal.Multimodal.afpNearDupPairs]] restricted to
-   * (corpus, arriving) cross pairs — the DuckDB twin.
-   *
-   * Returns (new_id, corpus_id, hamming).
-   */
-  def afpIngestStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val schema = tableSchema(spark, s"$dir/documents.parquet")
-    val idx = afpCorpusIndex(spark, dir)
-    val fps = reader(spark, schema)
-      .parquet(streamDirFor(dir, "docs_mmafp_", "documents.parquet"))
-      .filter(col("doc_id") % 20 === 0)
-      .select("doc_id").as[Long]
-      .map { id =>
-        val r = graft.multimodal.Multimodal.decodeWavAfp(id + 10000000L,
-          graft.multimodal.Multimodal.wavFpFixture(id, perturb = true))
-        (r.getLong(0), r.getLong(1))
-      }.toDF("new_id", "afp")
-    val banded = fps.select(col("new_id"), col("afp"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("band_val",
-        expr("shiftright(afp, cast(band * 16 as int)) & 65535"))
-    val pairs = banded.join(broadcast(idx), Seq("band", "band_val"))
-      .withColumn("hamming",
-        bit_count(col("afp").bitwiseXOR(col("corpus_hash"))))
-      .filter(col("hamming") <= 6)
-      .select(col("new_id"), col("corpus_id"), col("hamming"))
-      .dropDuplicates("new_id", "corpus_id")
-    drainAvailableNow(pairs, "mm_wav_neardup_stream", "append")
-  }
-
-  def lshIngestStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/documents.parquet")
-    val corpusIdx = lshCorpusIndex(spark, dir)
-    val newDocs = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "docs_lsh_", "documents.parquet"))
-      .filter(col("doc_id") % 10 === 0)
-    val pairs = graft.dedup.Dedup.minhashBandKeys(newDocs)
-      .withColumnRenamed("doc_id", "new_id")
-      .join(corpusIdx, Seq("band", "band_val"))
-      .select("new_id", "corpus_id")
-      .dropDuplicates("new_id", "corpus_id")
-    drainAvailableNow(pairs, "dedup_lsh_stream", "append")
-  }
+   * image [[dhashIngestStreaming]], audio here) over noise-perturbed WAV
+   * clips. Equals the batch [[graft.multimodal.Multimodal.afpNearDupPairs]]
+   * restricted to (corpus, arriving) cross pairs — the DuckDB twin. */
+  def afpIngestStreaming(spark: SparkSession, dir: String): DataFrame =
+    bandedIngestStreaming(spark, dir, Audio)
 
   /**
    * STREAM-STREAM interval join (funnel attribution): clicks joined to the
@@ -764,21 +687,12 @@ object EventStreams {
    * distance, so each side's buffered state expires once the watermark
    * passes click_ts + window — the bounded-state shape Structured
    * Streaming requires for unbounded stream-stream joins. Inner joins emit
-   * matches as soon as both sides arrive; with the whole table in one
-   * AvailableNow batch the result equals the batch join, which is the
-   * DuckDB twin.
+   * matches as soon as both sides arrive; the result equals the batch
+   * join, which is the DuckDB twin.
    */
-  def funnelJoinStreaming(spark0: SparkSession, dir: String,
+  def funnelJoinStreaming(spark: SparkSession, dir: String,
                           windowMinutes: Int = 60): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "events_funnel_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
+    val stream = streamSource(spark, dir, oneBatch = true)
     val clicks = stream.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
       .withWatermark("click_ts", "2 hours")
@@ -833,23 +747,20 @@ object EventStreams {
    * every real user's timeout before the query stops (Spark runs the extra
    * no-data batch because the stateful operator requires it). The sentinel
    * user is filtered from the output. Emitted sessions match the batch
-   * gaps-and-islands twin [[sessionize]] row for row.
+   * gaps-and-islands twin [[sessionize]] row for row. The 1-second
+   * watermark is the harness's, not a deployment's: a production deploy
+   * sizes the watermark to its real out-of-orderness and lets late
+   * sessions flush continuously.
    */
   private val sessMaxTsUs = new Memo[String, Option[Long]]
 
-  def sessionizeStreaming(spark0: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
-    val spark = streamSession(spark0)
+  def sessionizeStreaming(spark: SparkSession, dir: String, gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val tsIsLong = schema("ts").dataType == org.apache.spark.sql.types.LongType
     // max real event time — a scalar property of the STANDING table,
-    // computed once per dir (a production deploy would just pick a
-    // watermark delay and let late sessions flush continuously)
+    // computed once per dir
     val maxOpt = sessMaxTsUs(dir) {
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      val tsUs = if (tsIsLong) expr("ts div 1000") else unix_micros(col("ts"))
-      val r = raw.select(max(tsUs)).head()
+      val r = loadEvents(spark, dir).select(max(unix_micros(col("ts")))).head()
       if (r.isNullAt(0)) None else Some(r.getLong(0))
     }
     if (maxOpt.isEmpty)
@@ -857,32 +768,13 @@ object EventStreams {
       return sessionize(loadEvents(spark, dir), gapMinutes)
         .select("user_id", "session_seq", "session_start", "session_end",
           "n_events", "value_sum")
-    val maxTsUs = maxOpt.get
-    val streamDir = streamDirFor(dir, "events_sessions_")
     // sentinel: one event 1h past every possible timeout, sentinel user -1
-    val sentinelUs = maxTsUs + gapUs + 3600L * 1000000L
     val sentinel = spark.range(1).select(
       lit(-1L).as("event_id"),
-      (if (tsIsLong) (lit(sentinelUs) * 1000L).as("ts")
-       else timestamp_micros(lit(sentinelUs)).as("ts")),
+      timestamp_micros(lit(maxOpt.get + gapUs + 3600L * 1000000L)).as("ts"),
       lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
       lit(0.0).as("value"), lit(null.asInstanceOf[String]).as("props"))
-    sentinel.write.mode("append").parquet(streamDir)
-
-    // The 1-second watermark is only sound because the whole table (events
-    // + sentinel) arrives in ONE micro-batch: if the file source split it,
-    // later batches' rows would be dropped as late data. Pin that
-    // assumption explicitly — maxFilesPerTrigger high enough for any
-    // driver-written table — rather than inheriting session defaults; a
-    // production deploy would instead size the watermark to its real
-    // out-of-orderness and let late sessions flush continuously.
-    val raw = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDir)
-    val stream =
-      if (tsIsLong) raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val evs = stream
+    val evs = streamSource(spark, dir, oneBatch = true, seed = Some(sentinel))
       .withWatermark("ts", "1 second")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Ev]
@@ -968,6 +860,12 @@ object EventStreams {
         col("left_id").as("click_id"), col("last_left_ts").as("click_ts"))
   }
 
+  /**
+   * Sessionization: split each user's event stream into sessions separated
+   * by gaps > `gapMinutes`. Batch form — the classic gaps-and-islands
+   * (lag + running sum), fully windowed, no driver state;
+   * [[sessionizeStreaming]] is the flatMapGroupsWithState form.
+   */
   def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1013,24 +911,16 @@ object EventStreams {
    * session_window actually exists for: per-key session state merges as
    * events arrive and EVICTS once the watermark passes a session's end
    * (the flatMapGroupsWithState sessionizer hand-rolls exactly this
-   * lifecycle; this is the declarative form). Complete-mode drain over
-   * one AvailableNow batch finalizes every session, so the result equals
-   * the batch aggregate — the DuckDB twin.
+   * lifecycle; this is the declarative form). The complete-mode drain
+   * finalizes every session, so the result equals the batch aggregate —
+   * the DuckDB twin.
    */
-  def sessionWindowStreaming(spark0: SparkSession, dir: String,
-                             gapMinutes: Int = 30): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema)
-      .option("maxFilesPerTrigger", Int.MaxValue)
-      .parquet(streamDirFor(dir, "events_sesswin_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val agg = sessionWindowAgg(stream.withWatermark("ts", "2 hours"), gapMinutes)
-    drainAvailableNow(agg, "events_sesswin", "complete")
-  }
+  def sessionWindowStreaming(spark: SparkSession, dir: String,
+                             gapMinutes: Int = 30): DataFrame =
+    drainAvailableNow(
+      sessionWindowAgg(streamSource(spark, dir, oneBatch = true)
+        .withWatermark("ts", "2 hours"), gapMinutes),
+      "events_sesswin", "complete")
 
   /** Rounded cent representation shared by the z-score batch/stream twins:
    * every moment is an exact integer aggregate over this column, so
@@ -1076,16 +966,14 @@ object EventStreams {
    * projection speed. Draining the whole file equals the batch twin.
    */
   def zscoreStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
+    val stream = streamSource(spark0, dir)
+    val spark = stream.sparkSession
     // the trained artifact is a property of the STANDING corpus — train
     // once per dir and memoize the snapshot (the qualityGateStreaming
     // posture), so each drain pays scoring + broadcast join, not
     // re-deriving the per-type moments batch aggregate
     val stats = indexes.frame(spark, ("zscore_stats", dir))(
       zscoreStats(spark.read.parquet(s"$dir/events.parquet")))
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val stream = reader(spark, schema)
-      .parquet(streamDirFor(dir, "events_zscore_"))
     drainAvailableNow(zscoreScore(stream, stats), "events_zscore", "append")
   }
 
@@ -1104,19 +992,11 @@ object EventStreams {
       .filter(col("n") >= minCount)
       .select(col("w.start").as("window_start"), col("user_id"), col("n"))
 
-  /** The same detection as a watermarked stream (complete-mode drain;
-   * one AvailableNow batch == the batch form, which is the oracle). */
-  def burstStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema).parquet(streamDirFor(dir, "events_burst_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val agg = burstBatch(stream.withWatermark("ts", "2 hours"))
-    drainAvailableNow(agg, "events_burst", "complete")
-  }
+  /** The same detection as a watermarked stream (complete-mode drain). */
+  def burstStreaming(spark: SparkSession, dir: String): DataFrame =
+    drainAvailableNow(
+      burstBatch(streamSource(spark, dir).withWatermark("ts", "2 hours")),
+      "events_burst", "complete")
 
   /**
    * Streaming CDC materialization: latest-wins upsert state as ONE
@@ -1124,19 +1004,11 @@ object EventStreams {
    * complete mode, so the state store holds exactly one row per key (the
    * freshest version) no matter how many changes stream through, and every
    * emit IS the merged table. The streaming twin of
-   * [[graft.operators.Merge.upsertLatest]]: one AvailableNow batch over
-   * the full change log equals the batch merge, which is the oracle.
+   * [[graft.operators.Merge.upsertLatest]]: draining the full change log
+   * equals the batch merge, which is the oracle.
    */
-  def mergeLatestStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema)
-      .parquet(streamDirFor(dir, "events_merge_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val latest = stream
+  def mergeLatestStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val latest = streamSource(spark, dir)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max_by(struct(col("event_id"), col("ts"), col("value")),
         struct(col("ts"), col("event_id"))).as("v"))
@@ -1154,15 +1026,8 @@ object EventStreams {
    * that a custom TypedImperativeAggregate's state genuinely survives and
    * merges between triggers, not just within one batch.
    */
-  def topkStreaming(spark0: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema).parquet(streamDirFor(dir, "events_topk_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val agg = stream
+  def topkStreaming(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+    val agg = streamSource(spark, dir)
       .select(col("event_type"),
         graft.functions.FastRound.round(col("value") * 100, 0)
           .cast("long").as("vc"))
@@ -1182,22 +1047,17 @@ object EventStreams {
    * enrichment is embarrassingly incremental (no cross-batch state: the
    * reference side is a materialized table, each probe row's answer
    * depends only on itself), so splitting the drain into micro-batches
-   * (`spark.graft.stream.maxFilesPerTrigger`) cannot change the result —
-   * the batch oracle (DuckDB's native ASOF LEFT JOIN) is exact.
+   * cannot change the result — the batch oracle (DuckDB's native ASOF
+   * LEFT JOIN) is exact.
    *
    * foreachBatch output lands as parquet appends (exactly-once per batch
    * via the sink's idempotent overwrite-by-batch-id directory layout).
    */
   def asofStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    val schema = tableSchema(spark, s"$dir/events.parquet")
-    val raw = reader(spark, schema).parquet(streamDirFor(dir, "events_asof_"))
-    val stream =
-      if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw
-    val purchases = stream.filter(col("event_type") === "purchase")
+    val purchases = streamSource(spark0, dir)
+      .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"))
+    val spark = purchases.sparkSession
     // the click side is the STANDING reference table the gate enriches
     // against — materialize it once per dir (the lshCorpusIndex posture)
     // instead of re-writing the same filtered projection every drain
@@ -1212,6 +1072,7 @@ object EventStreams {
     graft.util.Cleanup.onExitDelete(outDir)
     graft.util.Cleanup.onExitDelete(ck)
     val q = purchases.writeStream
+      .queryName(s"events_asof_$tag")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         graft.operators.AsOf.join(batch.toDF(), clicks,
             "user_id", "ts", "c_uid", "c_ts", "c_id")

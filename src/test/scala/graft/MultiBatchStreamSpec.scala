@@ -9,7 +9,8 @@ import graft.streaming.EventStreams
  * The streaming twins' oracle checks drain everything in ONE AvailableNow
  * batch — equality there doesn't prove the state machinery. This spec
  * splits the event table into four time-ordered files and bounds the
- * source to one file per trigger, so the drain runs four micro-batches:
+ * source to one file per trigger, so the drain runs four micro-batches
+ * (counted per drain by [[withOneFilePerTrigger]]):
  * the windowed aggregate must merge partial windows across batches, the
  * stateful dedup must remember keys from earlier batches, and the CDC
  * merge state must overwrite older versions — and still equal the batch
@@ -48,9 +49,42 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     d
   }
 
-  private def withOneFilePerTrigger[T](body: => T): T = {
-    spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "1")
-    try body finally spark.conf.unset("spark.graft.stream.maxFilesPerTrigger")
+  /** Runs `body` with the source bounded to one file per trigger, and
+   * asserts that a run of the streaming query named `drain` took at least
+   * 4 micro-batches with input rows — so no drain can silently collapse
+   * into one batch. The drains run in EventStreams' cloned session, whose
+   * StreamingQueryManager is out of reach here, so the
+   * StreamingQueryListener events are read off the SparkContext's bus. */
+  private def withOneFilePerTrigger[T](drain: String)(body: => T): T = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val batches = scala.collection.mutable.Map.empty[java.util.UUID, Int]
+    val ended = scala.collection.mutable.Set.empty[java.util.UUID]
+    def ours(name: String) = name != null && name.startsWith(drain + "_")
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        batches.synchronized(e match {
+          case s: QueryStartedEvent if ours(s.name) => batches(s.runId) = 0
+          case p: QueryProgressEvent
+              if ours(p.progress.name) && p.progress.numInputRows > 0 =>
+            batches(p.progress.runId) = batches.getOrElse(p.progress.runId, 0) + 1
+          case t: QueryTerminatedEvent if batches.contains(t.runId) => ended += t.runId
+          case _ =>
+        })
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "1")
+      val out = try body finally spark.conf.unset("spark.graft.stream.maxFilesPerTrigger")
+      // the bus is asynchronous: a run's progress events precede its
+      // terminated event, so wait until every matched run has ended
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (batches.synchronized(batches.isEmpty || !batches.keySet.subsetOf(ended)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      val most = batches.synchronized(batches.values.maxOption.getOrElse(0))
+      assert(most >= 4,
+        s"$drain drained in $most micro-batch(es) with input rows, expected >= 4")
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -59,7 +93,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
   test("windowed aggregate over 4 micro-batches equals the batch answer") {
     val batch = EventStreams.windowedAggBatch(
       EventStreams.loadEvents(spark, splitDir))
-    val streamed = withOneFilePerTrigger(
+    val streamed = withOneFilePerTrigger("events_windowed")(
       EventStreams.windowedAggStreaming(spark, splitDir))
     assert(sortedRows(streamed) == sortedRows(batch))
   }
@@ -67,7 +101,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
   test("stateful dedup remembers keys across micro-batches") {
     val batch = EventStreams.loadEvents(spark, splitDir)
       .select("user_id", "event_type").distinct()
-    val streamed = withOneFilePerTrigger(
+    val streamed = withOneFilePerTrigger("events_dedup")(
       EventStreams.distinctPairsStreaming(spark, splitDir))
     assert(streamed.count() == batch.count())
     assert(sortedRows(streamed) == sortedRows(batch))
@@ -120,7 +154,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     val batch = graft.operators.Merge.upsertLatest(
       e.limit(0), e, Seq("user_id", "event_type"),
       Seq(col("ts"), col("event_id")))
-    val streamed = withOneFilePerTrigger(
+    val streamed = withOneFilePerTrigger("events_merge")(
       EventStreams.mergeLatestStreaming(spark, splitDir))
     assert(sortedRows(streamed) == sortedRows(batch))
   }
@@ -144,7 +178,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     val expect = sortedRows(graft.text.Curation.contaminatedSpans(
       docs.filter(col("doc_id") % 50 =!= 0),
       docs.filter(col("doc_id") % 50 === 0), L = 10))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("txt_decon_spans_stream")(
       sortedRows(EventStreams.deconSpansStreaming(spark, docsSplitDir, L = 10)))
     assert(got == expect && got.nonEmpty)
   }
@@ -170,7 +204,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
         cand.join(dupS, Seq("s")).filter(col("doc_id") % 10 === 0)
           .select("doc_id", "pos"), L)
       .withColumnRenamed("span_tokens", "span_chars"))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("txt_substr_stream")(
       sortedRows(EventStreams.substrGateStreaming(spark, docsSplitDir, L = 30)))
     assert(got == expect && got.nonEmpty)
   }
@@ -192,7 +226,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
       Multimodal.dhashNearDupPairs(fps, maxDist = 6)
         .filter(col("d1") < 10000000L && col("d2") >= 10000000L)
         .select(col("d2").as("new_id"), col("d1").as("corpus_id"), col("hamming")))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("mm_neardup_stream")(
       sortedRows(EventStreams.dhashIngestStreaming(spark, docsSplitDir)))
     assert(got == expect && got.nonEmpty)
   }
@@ -215,7 +249,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
       Multimodal.afpNearDupPairs(fps, maxDist = 6)
         .filter(col("d1") < 10000000L && col("d2") >= 10000000L)
         .select(col("d2").as("new_id"), col("d1").as("corpus_id"), col("hamming")))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("mm_wav_neardup_stream")(
       sortedRows(EventStreams.afpIngestStreaming(spark, docsSplitDir)))
     assert(got == expect && got.nonEmpty)
   }
@@ -226,7 +260,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     // are trained on the STANDING table, identical in both drives)
     val docs = spark.read.parquet(s"$docsSplitDir/documents.parquet")
     val expect = sortedRows(graft.text.Curation.qualityGate(docs, p = 0.25))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("txt_quality_filter_stream")(
       sortedRows(EventStreams.qualityGateStreaming(spark, docsSplitDir)))
     assert(got == expect && got.nonEmpty)
   }
@@ -239,7 +273,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     val expect = sortedRows(graft.text.Curation.dsirWeights(
       docs.filter(col("source") =!= "src1"),
       docs.filter(col("source") === "src1"), buckets = 256))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("txt_dsir_stream")(
       sortedRows(EventStreams.dsirGateStreaming(spark, docsSplitDir)))
     assert(got == expect && got.nonEmpty)
   }
@@ -250,7 +284,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     // for bit (clicks are a standing table in both cases)
     val expect = sortedRows(
       graft.queries.TrainQueries.all("evt_asof_custom")(spark, splitDir))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("events_asof")(
       sortedRows(EventStreams.asofStreaming(spark, splitDir)))
     assert(got == expect && got.nonEmpty)
   }
@@ -305,7 +339,7 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     // equality with the batch aggregate proves that path end to end
     val expect = sortedRows(
       graft.queries.TrainQueries.all("evt_topk_agg")(spark, splitDir))
-    val got = withOneFilePerTrigger(
+    val got = withOneFilePerTrigger("events_topk")(
       sortedRows(EventStreams.topkStreaming(spark, splitDir)))
     assert(got == expect && got.nonEmpty)
   }
