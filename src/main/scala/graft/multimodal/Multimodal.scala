@@ -30,6 +30,10 @@ import org.apache.spark.sql.types._
  *  - [[decodeWav]] / [[decodeWavAfp]], a REAL RIFF/PCM16 chunk-walk
  *    parser for audio. Swapping in a native codec changes only the
  *    decoder function; the plan shape stays.
+ *
+ * Each real codec over its closed-form fixture corpus is one [[Codec]];
+ * [[fixtureCorpus]] decodes any of them, with or without the planted
+ * twins, for the batch queries and the streaming gates alike.
  */
 object Multimodal {
 
@@ -431,36 +435,22 @@ object Multimodal {
   }
 
   /**
-   * Audio near-duplicate pairs over [[decodeWavAfp]] fingerprints — the
-   * identical banded Hamming machinery as [[dhashNearDupPairs]].
-   * Returns (d1, d2, hamming). Candidate recall is GUARANTEED only for
-   * distance <= 3 (4x16-bit banding pigeonhole); pairs at distance 4-6
-   * are best-effort — they surface only when their flipped bits don't
-   * spread across all four bands (see [[graft.dedup.Dedup.simhashPairs]]).
+   * Near-duplicate pairs over the 64-bit fingerprint column `hash` of
+   * `fps` (a dHash, an audio envelope or a spectral fingerprint): Hamming
+   * distance <= maxDist, candidates generated by the exact banding idiom
+   * of [[graft.dedup.Dedup.simhashPairs]] (four 16-bit bands, equi-join
+   * on (band, band_val), xor/bit_count verification before the
+   * distinct) — the banded self-join stays equi-join-shaped at any corpus
+   * size; no all-pairs anywhere. Returns (d1, d2, hamming). Candidate
+   * recall is GUARANTEED only for distance <= 3 (pigeonhole: <= 3 flips
+   * cannot touch all 4 bands); pairs at distance 4-6 surface best-effort,
+   * only when some band stays clean. `materialized` as in
+   * [[graft.dedup.Dedup.simhashPairs]].
    */
-  def afpNearDupPairs(hashes: DataFrame, maxDist: Int = 6,
-                      materialized: Boolean = false): DataFrame =
+  def nearDupPairs(fps: DataFrame, hash: String, maxDist: Int = 6,
+                   materialized: Boolean = false): DataFrame =
     graft.dedup.Dedup.simhashPairs(
-      hashes.select(col("doc_id"), col("afp").as("simhash")), maxDist,
-      materialized)
-
-  /**
-   * Image near-duplicate pairs over [[decodePpmDhash]] fingerprints:
-   * Hamming distance <= maxDist, candidates generated by the exact
-   * banding idiom of [[graft.dedup.Dedup.simhashPairs]] (four 16-bit
-   * bands, equi-join on (band, band_val), xor/bit_count verification
-   * before the distinct) — the banded self-join stays equi-join-shaped
-   * at any corpus size; no all-pairs anywhere. Returns (d1, d2, hamming).
-   * Candidate recall is GUARANTEED only for distance <= 3 (pigeonhole:
-   * <= 3 flips cannot touch all 4 bands); pairs at distance 4-6 surface
-   * best-effort, only when some band stays clean — mirror of the
-   * [[graft.dedup.Dedup.simhashPairs]] contract.
-   */
-  def dhashNearDupPairs(hashes: DataFrame, maxDist: Int = 6,
-                        materialized: Boolean = false): DataFrame =
-    graft.dedup.Dedup.simhashPairs(
-      hashes.select(col("doc_id"), col("dhash").as("simhash")), maxDist,
-      materialized)
+      fps.select(col("doc_id"), col(hash).as("simhash")), maxDist, materialized)
 
   /** Decoded-WAV row: header-derived rate/length, a position-weighted
    * amplitude checksum and the mean-square energy over the PCM stream. */
@@ -742,23 +732,83 @@ object Multimodal {
     encodeJpeg(w, h, rgb, quality)
   }
 
+  // ---------------------------------------------------------------------
+  // The real codecs over their closed-form fixture corpora: one table,
+  // one builder, for every batch query and streaming gate that decodes.
+  // ---------------------------------------------------------------------
+
+  /** A real codec over its fixture corpus: the fixture bytes per doc id,
+   * the decoder and its output schema and, for a fingerprint codec, the
+   * decoded 64-bit hash column and the bytes of a doc's planted twin. */
+  case class Codec(fixture: Long => Array[Byte],
+                   decoder: (Long, Array[Byte]) => Row,
+                   schema: StructType,
+                   hash: Option[String] = None,
+                   twin: Option[Long => Array[Byte]] = None)
+
+  val Ppm = Codec(ppmFixture, decodePpm, PpmFeatureSchema)
+  val Wav = Codec(wavFixture, decodeWav, WavFeatureSchema)
+  val Png = Codec(pngFixture, decodePng, PpmFeatureSchema)
+  /** dHash over PPM; twin: +1 on every 9th byte ([[ppmDhashFixture]]). */
+  val PpmDhash = Codec(ppmDhashFixture(_), decodePpmDhash, DhashSchema,
+    Some("dhash"), Some(ppmDhashFixture(_, perturb = true)))
+  /** dHash over lossy q90 JPEG; twin: a true q75 re-encode. */
+  val JpegDhash = Codec(jpegFixture(_), decodeJpegDhash, DhashSchema,
+    Some("dhash"), Some(id => reencodeJpeg(id, jpegFixture(id), 0.75f)))
+  /** Audio envelope fingerprint; twin: sample noise ([[wavFpFixture]]). */
+  val WavAfp = Codec(wavFpFixture(_), decodeWavAfp, AudioFpSchema,
+    Some("afp"), Some(wavFpFixture(_, perturb = true)))
+  /** Audio envelope fingerprint; twin: the [[reencodeWav]] transcode. */
+  val WavAfpReenc = WavAfp.copy(twin = Some(reencodedWavFp))
+  /** Spectral audio fingerprint; twin: the [[reencodeWav]] transcode. */
+  val WavSfp = Codec(wavFpFixture(_), decodeWavSfp, SpectralFpSchema,
+    Some("sfp"), Some(reencodedWavFp))
+  private def reencodedWavFp(id: Long): Array[Byte] = reencodeWav(id, wavFpFixture(id))
+
+  /** The planted-twin rule: every `TwinEvery`-th doc id has a twin at
+   * doc id + `TwinOffset`. */
+  val TwinEvery = 20
+  val TwinOffset = 10000000L
+
+  /** The planted pairs (d1 = doc id, d2 = its twin's id) of the `doc_id`s
+   * of `ids`. */
+  def plantedPairs(ids: DataFrame): DataFrame =
+    ids.filter(col("doc_id") % TwinEvery === 0)
+      .select(col("doc_id").as("d1"), (col("doc_id") + TwinOffset).as("d2"))
+
+  /** The decoded fixture corpus of `codec` over the `doc_id`s of `ids`
+   * and, with `twins`, the codec's twin of each planted doc at its
+   * [[plantedPairs]] id, through [[decodeFeatures]]. */
+  def fixtureCorpus(ids: DataFrame, codec: Codec, twins: Boolean): DataFrame = {
+    import ids.sparkSession.implicits._
+    val fixture = codec.fixture
+    val base = ids.select("doc_id").as[Long].map(id => (id, fixture(id)))
+    val payloads = if (!twins) base else {
+      val twin = codec.twin.getOrElse(sys.error("fixtureCorpus: codec has no twin"))
+      base.union(plantedPairs(ids).as[(Long, Long)].map { case (id, t) => (t, twin(id)) })
+    }
+    decodeFeatures(payloads.toDF("doc_id", "payload"), codec.decoder, codec.schema)
+  }
+
+  private val DecodePartitions = 8
+  private val DecodeBatch = 64
+
   /**
-   * Per-partition batched decode: iterates the partition in `batchSize`
-   * groups (the shape a vectorized/native decoder wants), preserving
-   * laziness — no partition is materialized whole. Repartitions to
-   * `parallelism` so decode cost spreads evenly even when the upstream
-   * partitioning was size-skewed (media blobs usually are). `decoder` and
-   * `schema` select the codec ([[fakeDecode]] by default; [[decodePpm]] +
-   * [[PpmFeatureSchema]] for real PPM payloads).
+   * Per-partition batched decode: iterates the partition in
+   * [[DecodeBatch]]-sized groups (the shape a vectorized/native decoder
+   * wants), preserving laziness — no partition is materialized whole.
+   * Repartitions to [[DecodePartitions]] by doc_id so decode cost spreads
+   * evenly even when the upstream partitioning was size-skewed (media
+   * blobs usually are). `decoder` and `schema` select the codec
+   * ([[fakeDecode]] by default; see [[Codec]] for the real ones).
    */
-  def decodeFeatures(mm: DataFrame, parallelism: Int = 0,
-                     batchSize: Int = 64,
+  def decodeFeatures(mm: DataFrame,
                      decoder: (Long, Array[Byte]) => Row = fakeDecode,
                      schema: StructType = FeatureSchema): DataFrame = {
     val spark = mm.sparkSession
-    val in = if (parallelism > 0) mm.repartition(parallelism, col("doc_id")) else mm
-    val rdd = in.select(col("doc_id"), col("payload")).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
+    val rdd = mm.repartition(DecodePartitions, col("doc_id"))
+        .select(col("doc_id"), col("payload")).rdd.mapPartitions { it =>
+      it.grouped(DecodeBatch).flatMap { batch =>
         // a real decoder would process `batch` in one native call
         batch.iterator.map(r => decoder(r.getLong(0), r.getAs[Array[Byte]](1)))
       }

@@ -12,9 +12,11 @@ import graft.util.Memo
 
 /**
  * Training-data pipeline queries over `documents`, `embeddings`, `events`
- * (TESTDATA.md). Each has a DuckDB oracle in [[TrainOracles]] except the
- * multimodal decode (stubbed codec -> driver rows-only check) and the
- * streaming variant (checked against its own batch twin instead).
+ * (TESTDATA.md). Each has a DuckDB oracle in [[TrainOracles]]: the
+ * multimodal decodes (the stubbed codec and the real ones, every pixel
+ * or sample recomputed closed-form from doc_id) and the streaming
+ * variants (the `*_stream` drains, whose oracle is their batch answer)
+ * included.
  */
 object TrainQueries {
 
@@ -71,85 +73,30 @@ object TrainQueries {
   private def tokSpans(s: SparkSession, d: String): DataFrame =
     memo.frame(s, ("tok_spans", d))(graft.text.Curation.dupSpans(docs(s, d), L = 10))
 
-  /** dHash fingerprints of the PPM image corpus (real P6 fixtures +
-   * planted perturbed twins at doc_id + 1e7), decoded by the REAL PPM
-   * parser; and the banded Hamming near-dup pairs over them — the dump,
-   * pair, and recall queries all consume them. */
-  private def dhashes(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("dhash", d)) {
-      import s.implicits._
-      val ids = docs(s, d).select("doc_id").as[Long]
-      val base = ids.map(id => (id, Multimodal.ppmDhashFixture(id)))
-      val twins = ids.filter(_ % 20 == 0)
-        .map(id => (id + 10000000L, Multimodal.ppmDhashFixture(id, perturb = true)))
-      Multimodal.decodeFeatures(
-        base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
-        decoder = Multimodal.decodePpmDhash, schema = Multimodal.DhashSchema)
-    }
-  private def mmNeardup(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("mm_pairs", d))(Multimodal.dhashNearDupPairs(dhashes(s, d), maxDist = 6,
-      materialized = true))
+  /** The decoded fixture corpus of a fingerprint codec (its real
+   * fixtures + planted twins, [[Multimodal.fixtureCorpus]]) and the
+   * banded Hamming pairs over it, each once per dir — the dump, pair and
+   * recall queries of every fingerprint codec consume them. */
+  private def fps(s: SparkSession, d: String, c: Multimodal.Codec): DataFrame =
+    memo.frame(s, (c, d))(Multimodal.fixtureCorpus(docs(s, d), c, twins = true))
+  private def fpPairs(s: SparkSession, d: String, c: Multimodal.Codec): DataFrame =
+    memo.frame(s, ("pairs", c, d))(pairsOf(s, d, c))
+  private def pairsOf(s: SparkSession, d: String, c: Multimodal.Codec): DataFrame =
+    Multimodal.nearDupPairs(fps(s, d, c), c.hash.get, maxDist = 6, materialized = true)
 
-  /** dHash fingerprints through the REAL JPEG codec (javax.imageio):
-   * genuinely lossy q90 fixtures whose DCT-aligned flat blocks keep the
-   * decoded dHash bit-equal to the closed form, + planted twins that are
-   * TRUE re-encodes (decode -> encode again at q75 — the "same image
-   * saved by another site" duplicate). Shared by dump, pairs, recall. */
-  private def jpegDhashes(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("jpeg_dhash", d)) {
-      import s.implicits._
-      val ids = docs(s, d).select("doc_id").as[Long]
-      val base = ids.map(id => (id, Multimodal.jpegFixture(id)))
-      val twins = ids.filter(_ % 20 == 0).map(id => (id + 10000000L,
-        Multimodal.reencodeJpeg(id, Multimodal.jpegFixture(id), 0.75f)))
-      Multimodal.decodeFeatures(
-        base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
-        decoder = Multimodal.decodeJpegDhash, schema = Multimodal.DhashSchema)
-    }
-  private def jpegNeardup(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("jpeg_pairs", d))(Multimodal.dhashNearDupPairs(jpegDhashes(s, d), maxDist = 6,
-      materialized = true))
-
-  /** Audio envelope fingerprints of the WAV corpus (real RIFF fixtures +
-   * planted noise twins at doc_id + 1e7) and their banded Hamming pairs —
-   * the audio siblings of [[dhashes]]/[[mmNeardup]]. */
-  private def afps(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("afp", d)) {
-      import s.implicits._
-      val ids = docs(s, d).select("doc_id").as[Long]
-      val base = ids.map(id => (id, Multimodal.wavFpFixture(id)))
-      val twins = ids.filter(_ % 20 == 0)
-        .map(id => (id + 10000000L, Multimodal.wavFpFixture(id, perturb = true)))
-      Multimodal.decodeFeatures(
-        base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
-        decoder = Multimodal.decodeWavAfp, schema = Multimodal.AudioFpSchema)
-    }
-  private def afpNeardup(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("afp_pairs", d))(Multimodal.afpNearDupPairs(afps(s, d), maxDist = 6,
-      materialized = true))
-
-  /** Spectral (Haitsma–Kalker-shaped) fingerprints of the WAV corpus +
-   * RE-ENCODED twins (decode -> 2-tap low-pass -> re-encode, planted at
-   * doc_id + 1e7 — "the same recording transcoded", a perturbation the
-   * envelope fingerprint does NOT survive), plus the envelope
-   * fingerprints of the SAME re-encoded corpus for the side-by-side
-   * recall grade. Both ride the real RIFF/PCM16 parser. */
-  private def wavReencPayloads(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ids = docs(s, d).select("doc_id").as[Long]
-    val base = ids.map(id => (id, Multimodal.wavFpFixture(id)))
-    val twins = ids.filter(_ % 20 == 0).map(id => (id + 10000000L,
-      Multimodal.reencodeWav(id, Multimodal.wavFpFixture(id))))
-    base.union(twins).toDF("doc_id", "payload")
+  /** Planted-twin recall grade of a pair table: how many of the planted
+   * (doc, twin) pairs of `corpus` ([[Multimodal.plantedPairs]]) `pairs`
+   * recovers. Grades that are unioned share one `corpus` frame: Spark
+   * reuses the planted side's exchanges only within one relation. */
+  private def plantedRecall(corpus: DataFrame, pairs: DataFrame): DataFrame = {
+    val planted = Multimodal.plantedPairs(corpus)
+    val found = planted.join(pairs, Seq("d1", "d2"), "left_semi")
+      .agg(count(lit(1)).as("n_found"))
+    planted.agg(count(lit(1)).as("n_planted")).crossJoin(found)
+      .select(col("n_planted"), col("n_found"),
+        graft.functions.FastRound.round(col("n_found").cast("double") /
+          col("n_planted").cast("double"), 9).as("recall"))
   }
-  private def sfps(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("sfp", d))(Multimodal.decodeFeatures(
-      wavReencPayloads(s, d), parallelism = 8,
-      decoder = Multimodal.decodeWavSfp, schema = Multimodal.SpectralFpSchema))
-  private def afpsReenc(s: SparkSession, d: String): DataFrame =
-    memo.frame(s, ("afp_reenc", d))(Multimodal.decodeFeatures(
-      wavReencPayloads(s, d), parallelism = 8,
-      decoder = Multimodal.decodeWavAfp, schema = Multimodal.AudioFpSchema))
 
   /** Exact Jaccard>=0.5 pairs and MinHash-LSH candidate pairs, snapshot
    * once per dir — shared by their dump queries, the recall metric, and
@@ -212,7 +159,8 @@ object TrainQueries {
     shingles3(s, d); clusters3(s, d); exactReps(s, d); ()
   }
   def warmFingerprints(s: SparkSession, d: String): Unit = {
-    simhashFp(s, d); winnowFp(s, d); mmNeardup(s, d); afpNeardup(s, d); ()
+    simhashFp(s, d); winnowFp(s, d)
+    fpPairs(s, d, Multimodal.PpmDhash); fpPairs(s, d, Multimodal.WavAfp); ()
   }
   def warmEmbeddings(s: SparkSession, d: String): Unit = {
     kmeansCentroids(s, d); semCentroids(s, d); pqIndex(s, d); ()
@@ -1055,102 +1003,71 @@ object TrainQueries {
 
     // stubbed codec (fakeDecode closed-form twin in the oracle)
     "mm_decode_features" -> ((s, d) =>
-      Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d)), parallelism = 8)),
+      Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d)))),
 
     // REAL codec path: deterministic fixtures are genuine P6 files (real
     // encoder), parsed back by the real pure-JVM PPM decoder behind the
     // same batched mapPartitions contract; the oracle recomputes the
     // decoded stats closed-form from doc_id without parsing PPM
-    "mm_decode_ppm" -> ((s, d) => {
-      import s.implicits._
-      val mm = docs(s, d).select("doc_id").as[Long]
-        .map(id => (id, Multimodal.ppmFixture(id))).toDF("doc_id", "payload")
-      Multimodal.decodeFeatures(mm, parallelism = 8,
-        decoder = Multimodal.decodePpm, schema = Multimodal.PpmFeatureSchema)
-    }),
+    "mm_decode_ppm" -> ((s, d) =>
+      Multimodal.fixtureCorpus(docs(s, d), Multimodal.Ppm, twins = false)),
 
     // audio twin of the PPM path: genuine RIFF/PCM16 bytes from the real
     // encoder, walked back by the real chunk-list decoder; the oracle
     // recomputes the sample stream closed-form from doc_id
-    "mm_decode_wav" -> ((s, d) => {
-      import s.implicits._
-      val mm = docs(s, d).select("doc_id").as[Long]
-        .map(id => (id, Multimodal.wavFixture(id))).toDF("doc_id", "payload")
-      Multimodal.decodeFeatures(mm, parallelism = 8,
-        decoder = Multimodal.decodeWav, schema = Multimodal.WavFeatureSchema)
-    }),
+    "mm_decode_wav" -> ((s, d) =>
+      Multimodal.fixtureCorpus(docs(s, d), Multimodal.Wav, twins = false)),
 
     // REAL PNG decode (javax.imageio, lossless): fixture pixels are
     // closed-form in doc_id and PNG round-trips them exactly, so the
     // oracle recomputes dims, the position-weighted checksum, and the
     // mean without any image parsing — the strongest possible check on
     // a genuine binary codec
-    "mm_decode_png" -> ((s, d) => {
-      import s.implicits._
-      val mm = docs(s, d).select("doc_id").as[Long]
-        .map(id => (id, Multimodal.pngFixture(id))).toDF("doc_id", "payload")
-      Multimodal.decodeFeatures(mm, parallelism = 8,
-        decoder = Multimodal.decodePng, schema = Multimodal.PpmFeatureSchema)
-    }),
+    "mm_decode_png" -> ((s, d) =>
+      Multimodal.fixtureCorpus(docs(s, d), Multimodal.Png, twins = false)),
 
     // REAL JPEG decode (javax.imageio, genuinely LOSSY q90 bytes + true
     // decode->q75 re-encode twins): the fixture's flat DCT-aligned
     // blocks with >= 60-level margins make the decoded dHash bit-equal
     // to the closed form, so even a lossy codec gets a hash-checked
     // oracle — any decode drift over +-30 levels flips a bit and fails
-    "mm_decode_jpeg" -> ((s, d) => jpegDhashes(s, d)),
+    "mm_decode_jpeg" -> ((s, d) => fps(s, d, Multimodal.JpegDhash)),
 
     // banded Hamming near-dup pairs over the JPEG corpus — the
     // mm_neardup machinery on the bytes an actual crawl ingests
-    "mm_jpeg_neardup" -> ((s, d) => jpegNeardup(s, d)),
+    "mm_jpeg_neardup" -> ((s, d) => fpPairs(s, d, Multimodal.JpegDhash)),
 
     // re-encoded twins land at Hamming 0, so banding recall is exactly
     // 1.0 — the judge-visible grade that the lossy-codec near-dup path
     // catches every true re-encode
-    "mm_jpeg_recall" -> ((s, d) => {
-      val planted = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("d1"), (col("doc_id") + 10000000L).as("d2"))
-      val found = planted.join(jpegNeardup(s, d), Seq("d1", "d2"), "left_semi")
-        .agg(count(lit(1)).as("n_found"))
-      planted.agg(count(lit(1)).as("n_planted")).crossJoin(found)
-        .select(col("n_planted"), col("n_found"),
-          graft.functions.FastRound.round(col("n_found").cast("double") /
-            col("n_planted").cast("double"), 9).as("recall"))
-    }),
+    "mm_jpeg_recall" -> ((s, d) =>
+      plantedRecall(docs(s, d), fpPairs(s, d, Multimodal.JpegDhash))),
 
     // image near-dup across documents: dHash (9x8 luminance-gradient
     // perceptual hash) through the REAL PPM decoder over a corpus of
     // genuine P6 fixtures + planted perturbed twins (doc_id + 1e7, +1 on
     // every 9th byte); the oracle recomputes every pixel, grid sample,
     // and gradient bit closed-form from doc_id
-    "mm_dhash" -> ((s, d) => dhashes(s, d)),
+    "mm_dhash" -> ((s, d) => fps(s, d, Multimodal.PpmDhash)),
 
     // banded Hamming pairs over the dHashes — the visual twin of
     // dedup_simhash_pairs (same 4x16-bit banding, xor/bit_count verify)
-    "mm_neardup" -> ((s, d) => mmNeardup(s, d)),
+    "mm_neardup" -> ((s, d) => fpPairs(s, d, Multimodal.PpmDhash)),
 
     // index-quality grade: fraction of the planted perturbed twins the
     // banded pass recovers (a twin with > 3 flipped bits can miss all
     // four bands — the report makes the banding's recall observable,
     // the same contract as dedup_lsh_recall / ann_pq_recall)
-    "mm_neardup_recall" -> ((s, d) => {
-      val planted = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("d1"), (col("doc_id") + 10000000L).as("d2"))
-      val found = planted.join(mmNeardup(s, d), Seq("d1", "d2"), "left_semi")
-        .agg(count(lit(1)).as("n_found"))
-      planted.agg(count(lit(1)).as("n_planted")).crossJoin(found)
-        .select(col("n_planted"), col("n_found"),
-          graft.functions.FastRound.round(col("n_found").cast("double") /
-            col("n_planted").cast("double"), 9).as("recall"))
-    }),
+    "mm_neardup_recall" -> ((s, d) =>
+      plantedRecall(docs(s, d), fpPairs(s, d, Multimodal.PpmDhash))),
 
     // audio near-dup across documents: 64-bit envelope fingerprint
     // through the REAL RIFF/PCM16 parser over genuine WAV fixtures +
     // planted noise twins; every sample, envelope point, and gradient
     // bit recomputed closed-form by the oracle
-    "mm_wav_fp" -> ((s, d) => afps(s, d)),
+    "mm_wav_fp" -> ((s, d) => fps(s, d, Multimodal.WavAfp)),
 
-    "mm_wav_neardup" -> ((s, d) => afpNeardup(s, d)),
+    "mm_wav_neardup" -> ((s, d) => fpPairs(s, d, Multimodal.WavAfp)),
 
     // image ingest as a STREAM: arriving re-encoded images dHash'd
     // through the real decoder, probing the standing banded corpus index
@@ -1163,28 +1080,18 @@ object TrainQueries {
     // quantized-DFT band-energy gradients over the real PCM16 path —
     // the re-encode-robust upgrade of mm_wav_fp's envelope kernel, over
     // the corpus + genuinely transcoded (2-tap low-pass) twins
-    "mm_wav_fp_spec" -> ((s, d) => sfps(s, d)),
+    "mm_wav_fp_spec" -> ((s, d) => fps(s, d, Multimodal.WavSfp)),
 
     // the side-by-side index grade the spectral kernel exists for: on
     // TRANSCODED twins (not just level-shifted), envelope recall
     // collapses (hamming 16-36, no banded hit) while spectral recall
     // holds (hamming <= 3 at this scale -> pigeonhole-guaranteed 1.0)
     "mm_wav_spec_recall" -> ((s, d) => {
-      val planted = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("d1"), (col("doc_id") + 10000000L).as("d2"))
-      def grade(fp: DataFrame, hashCol: String, kind: String): DataFrame = {
-        val pairs = graft.dedup.Dedup.simhashPairs(
-          fp.select(col("doc_id"), col(hashCol).as("simhash")), maxDist = 6,
-          materialized = true) // fps are parquet-backed memos
-        val found = planted.join(pairs, Seq("d1", "d2"), "left_semi")
-          .agg(count(lit(1)).as("n_found"))
-        planted.agg(count(lit(1)).as("n_planted")).crossJoin(found)
-          .select(lit(kind).as("kind"), col("n_planted"), col("n_found"),
-            graft.functions.FastRound.round(col("n_found").cast("double") /
-              col("n_planted").cast("double"), 9).as("recall"))
-      }
-      grade(afpsReenc(s, d), "afp", "envelope")
-        .unionByName(grade(sfps(s, d), "sfp", "spectral"))
+      val ds = docs(s, d)
+      def grade(c: Multimodal.Codec, kind: String): DataFrame =
+        plantedRecall(ds, pairsOf(s, d, c)).select(lit(kind).as("kind"), col("*"))
+      grade(Multimodal.WavAfpReenc, "envelope")
+        .unionByName(grade(Multimodal.WavSfp, "spectral"))
     }),
 
     // audio ingest as a STREAM: arriving noise-perturbed WAV clips
@@ -1198,25 +1105,15 @@ object TrainQueries {
     // the noise twins flip 0-4 envelope bits; >3 flips can miss all four
     // bands (pigeonhole), so this recall is genuinely < 1 sometimes —
     // the same honest index grade as mm_neardup_recall
-    "mm_wav_neardup_recall" -> ((s, d) => {
-      val planted = docs(s, d).filter(col("doc_id") % 20 === 0)
-        .select(col("doc_id").as("d1"), (col("doc_id") + 10000000L).as("d2"))
-      val found = planted.join(afpNeardup(s, d), Seq("d1", "d2"), "left_semi")
-        .agg(count(lit(1)).as("n_found"))
-      planted.agg(count(lit(1)).as("n_planted")).crossJoin(found)
-        .select(col("n_planted"), col("n_found"),
-          graft.functions.FastRound.round(col("n_found").cast("double") /
-            col("n_planted").cast("double"), 9).as("recall"))
-    }),
+    "mm_wav_neardup_recall" -> ((s, d) =>
+      plantedRecall(docs(s, d), fpPairs(s, d, Multimodal.WavAfp))),
 
     "mm_frame_sample" -> ((s, d) =>
       Multimodal.sampleFrames(
-        Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d)), parallelism = 8),
-        stride = 2)),
+        Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d))), stride = 2)),
 
     "mm_resize" -> ((s, d) =>
-      Multimodal.resizeDims(
-        Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d)), parallelism = 8))),
+      Multimodal.resizeDims(Multimodal.decodeFeatures(Multimodal.asMultimodal(docs(s, d))))),
 
     // audio-style fixed-window payload chunking (256-byte segments).
     // The raw chunk bytes stay in the operator; the query projects a

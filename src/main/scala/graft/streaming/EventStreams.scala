@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -41,8 +41,8 @@ import graft.util.Memo
  *    sentinel are only sound when the table and the sentinel arrive
  *    together;
  *  - the ingest gates [[tokenBlockingStreaming]],
- *    [[incrementalBlockingStreaming]], [[pqEncodeStreaming]] and
- *    [[lshIngestStreaming]], whose oracle checks are stated for one batch.
+ *    [[incrementalBlockingStreaming]] and [[pqEncodeStreaming]], whose
+ *    oracle checks are stated for one batch.
  * Every other drain is stateless or merges its state across batches.
  */
 object EventStreams {
@@ -389,7 +389,7 @@ object EventStreams {
    * band-key join, which is the DuckDB oracle.
    */
   def lshIngestStreaming(spark0: SparkSession, dir: String): DataFrame = {
-    val newDocs = streamSource(spark0, dir, "documents", oneBatch = true)
+    val newDocs = streamSource(spark0, dir, "documents")
       .filter(col("doc_id") % 10 === 0)
     val pairs = graft.dedup.Dedup.minhashBandKeys(newDocs)
       .withColumnRenamed("doc_id", "new_id")
@@ -591,94 +591,64 @@ object EventStreams {
     drainAvailableNow(scored, "txt_dsir_stream", "append")
   }
 
-  /** One fingerprint modality of the banded near-dup ingest gates: the
-   * fixture payload per doc id (`perturb` = the arriving twin), the REAL
-   * decoder and its output schema, the decoded 64-bit hash column, and
-   * the drain's sink name. */
-  private case class Banded(hash: String, fixture: (Long, Boolean) => Array[Byte],
-                            decoder: (Long, Array[Byte]) => Row,
-                            schema: StructType, drain: String)
-
-  private val Image = Banded("dhash", Multimodal.ppmDhashFixture,
-    Multimodal.decodePpmDhash, Multimodal.DhashSchema, "mm_neardup_stream")
-  private val Audio = Banded("afp", Multimodal.wavFpFixture,
-    Multimodal.decodeWavAfp, Multimodal.AudioFpSchema, "mm_wav_neardup_stream")
-
   /** Standing banded index (corpus_id, corpus_hash, band, band_val) of a
-   * modality's BASE corpus (4×16-bit band keys per item,
+   * fingerprint codec's BASE corpus (4×16-bit band keys per item,
    * [[graft.dedup.Dedup.simhashBands]]), built through the real decoder
-   * over the fixture corpus and materialized once per dir — the static
-   * side of the modality's ingest gate. */
-  private def bandedCorpusIndex(spark: SparkSession, dir: String, b: Banded): DataFrame =
-    indexes.frame(spark, (s"${b.hash}_corpus", dir)) {
-      import spark.implicits._
-      val fixture = b.fixture
-      val ids = spark.read.parquet(s"$dir/documents.parquet")
-        .select("doc_id").as[Long]
-      val fp = Multimodal.decodeFeatures(
-        ids.map(id => (id, fixture(id, false))).toDF("doc_id", "payload"),
-        parallelism = 8, decoder = b.decoder, schema = b.schema)
+   * over the fixture corpus ([[Multimodal.fixtureCorpus]], no twins) and
+   * materialized once per dir — the static side of the codec's ingest
+   * gate. */
+  private def bandedCorpusIndex(spark: SparkSession, dir: String,
+                                c: Multimodal.Codec): DataFrame =
+    indexes.frame(spark, ("banded_corpus", c, dir))(
       graft.dedup.Dedup.simhashBands(
-        fp.select(col("doc_id").as("corpus_id"), col(b.hash).as("corpus_hash")),
-        "corpus_hash")
-    }
+        Multimodal.fixtureCorpus(spark.read.parquet(s"$dir/documents.parquet"), c, twins = false)
+          .select(col("doc_id").as("corpus_id"), col(c.hash.get).as("corpus_hash")),
+        "corpus_hash"))
 
-  /** Banded near-dup ingest gate of one modality: arriving items (the
-   * perturbed twins of the doc_id % 20 == 0 corpus rows, ids + 1e7) are
-   * fingerprinted through the real decoder and probe the standing
-   * [[bandedCorpusIndex]] via a broadcast join, with exact xor/bit_count
-   * verification — stateless except the pair dedup the LSH gate also
-   * carries. The decode runs as a per-row typed map here; a production
-   * deployment lifts it into foreachBatch for batched/native codecs — the
-   * gate shape (stream-static banded probe) is identical. Returns
-   * (new_id, corpus_id, hamming). */
+  /** Banded near-dup ingest gate of one fingerprint codec, drained as
+   * `drain`: arriving items (the codec's twins of the planted corpus rows,
+   * [[Multimodal.plantedPairs]]) are fingerprinted through the real
+   * decoder and probe the standing [[bandedCorpusIndex]] via a broadcast
+   * join, with exact xor/bit_count verification — stateless except the
+   * pair dedup the LSH gate also carries. The decode runs as a per-row
+   * typed map here; a production deployment lifts it into foreachBatch
+   * for batched/native codecs — the gate shape (stream-static banded
+   * probe) is identical. Returns (new_id, corpus_id, hamming), the batch
+   * [[Multimodal.nearDupPairs]] of the corpus with its twins restricted
+   * to (corpus, arriving) cross pairs — the DuckDB twin. */
   private def bandedIngestStreaming(spark0: SparkSession, dir: String,
-                                    b: Banded): DataFrame = {
-    val arriving = streamSource(spark0, dir, "documents")
-      .filter(col("doc_id") % 20 === 0)
+                                    c: Multimodal.Codec, drain: String): DataFrame = {
+    val arriving = Multimodal.plantedPairs(streamSource(spark0, dir, "documents"))
     val spark = arriving.sparkSession
     import spark.implicits._
-    val (fixture, decode) = (b.fixture, b.decoder)
-    val fps = arriving.select("doc_id").as[Long]
-      .map { id =>
-        val r = decode(id + 10000000L, fixture(id, true))
+    val (twin, decode, hash) = (c.twin.get, c.decoder, c.hash.get)
+    val fps = arriving.as[(Long, Long)]
+      .map { case (id, newId) =>
+        val r = decode(newId, twin(id))
         (r.getLong(0), r.getLong(1))
-      }.toDF("new_id", b.hash)
-    val pairs = graft.dedup.Dedup.simhashBands(fps, b.hash)
-      .join(broadcast(bandedCorpusIndex(spark, dir, b)), Seq("band", "band_val"))
+      }.toDF("new_id", hash)
+    val pairs = graft.dedup.Dedup.simhashBands(fps, hash)
+      .join(broadcast(bandedCorpusIndex(spark, dir, c)), Seq("band", "band_val"))
       .withColumn("hamming",
-        bit_count(col(b.hash).bitwiseXOR(col("corpus_hash"))))
+        bit_count(col(hash).bitwiseXOR(col("corpus_hash"))))
       .filter(col("hamming") <= 6)
       .select(col("new_id"), col("corpus_id"), col("hamming"))
       .dropDuplicates("new_id", "corpus_id")
-    drainAvailableNow(pairs, b.drain, "append")
+    drainAvailableNow(pairs, drain, "append")
   }
 
-  /** [[bandedCorpusIndex]] of the BASE image corpus, dHash'd through the
-   * REAL PPM decoder. */
-  def dhashCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    bandedCorpusIndex(spark, dir, Image)
-
   /** Streaming image-ingest near-dup gate — the visual twin of
-   * [[lshIngestStreaming]] ([[bandedIngestStreaming]] over re-encoded PPM
-   * images). Equals the batch
-   * [[graft.multimodal.Multimodal.dhashNearDupPairs]] restricted to
-   * (corpus, arriving) cross pairs — the DuckDB twin. */
+   * [[lshIngestStreaming]] ([[bandedIngestStreaming]] over perturbed PPM
+   * images, [[Multimodal.PpmDhash]]). */
   def dhashIngestStreaming(spark: SparkSession, dir: String): DataFrame =
-    bandedIngestStreaming(spark, dir, Image)
-
-  /** [[bandedCorpusIndex]] of the BASE WAV corpus, envelope-fingerprinted
-   * through the REAL RIFF/PCM16 parser. */
-  def afpCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    bandedCorpusIndex(spark, dir, Audio)
+    bandedIngestStreaming(spark, dir, Multimodal.PpmDhash, "mm_neardup_stream")
 
   /** Streaming audio-ingest near-dup gate — completes batch/stream
    * symmetry across all three modalities (text [[lshIngestStreaming]],
    * image [[dhashIngestStreaming]], audio here) over noise-perturbed WAV
-   * clips. Equals the batch [[graft.multimodal.Multimodal.afpNearDupPairs]]
-   * restricted to (corpus, arriving) cross pairs — the DuckDB twin. */
+   * clips, [[Multimodal.WavAfp]]. */
   def afpIngestStreaming(spark: SparkSession, dir: String): DataFrame =
-    bandedIngestStreaming(spark, dir, Audio)
+    bandedIngestStreaming(spark, dir, Multimodal.WavAfp, "mm_wav_neardup_stream")
 
   /**
    * STREAM-STREAM interval join (funnel attribution): clicks joined to the

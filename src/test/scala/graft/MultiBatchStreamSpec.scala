@@ -209,6 +209,23 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     assert(got == expect && got.nonEmpty)
   }
 
+  test("streaming LSH ingest gate over 4 micro-batches equals the batch band-key join") {
+    // a stateless band-key probe of the standing corpus index plus the
+    // pair dedup: a 4-way split must reproduce the batch join of the
+    // arriving docs' (doc_id % 10 == 0) band keys with the corpus' keys
+    val keys = graft.dedup.Dedup.minhashBandKeys(
+      spark.read.parquet(s"$docsSplitDir/documents.parquet"))
+    def side(arriving: Boolean, id: String) =
+      keys.filter((col("doc_id") % 10 === 0) === arriving)
+        .select(col("band"), col("band_val"), col("doc_id").as(id))
+    val expect = sortedRows(side(arriving = true, "new_id")
+      .join(side(arriving = false, "corpus_id"), Seq("band", "band_val"))
+      .select("new_id", "corpus_id").distinct())
+    val got = withOneFilePerTrigger("dedup_lsh_stream")(
+      sortedRows(EventStreams.lshIngestStreaming(spark, docsSplitDir)))
+    assert(got == expect && got.nonEmpty)
+  }
+
   test("streaming image-ingest gate over 4 micro-batches equals the batch cross pairs") {
     // the pair dedup is the only state; a 4-way split must still equal
     // the batch banded pairs restricted to (corpus, arriving)
@@ -220,10 +237,13 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     val twins = ids.filter(_ % 20 == 0)
       .map(id => (id + 10000000L, Multimodal.ppmDhashFixture(id, perturb = true)))
     val fps = Multimodal.decodeFeatures(
-      base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
+      base.union(twins).toDF("doc_id", "payload"),
       decoder = Multimodal.decodePpmDhash, schema = Multimodal.DhashSchema)
+    // the shared builder must plant and decode exactly this corpus
+    assert(sortedRows(Multimodal.fixtureCorpus(ids.toDF(), Multimodal.PpmDhash,
+      twins = true)) == sortedRows(fps))
     val expect = sortedRows(
-      Multimodal.dhashNearDupPairs(fps, maxDist = 6)
+      Multimodal.nearDupPairs(fps, "dhash", maxDist = 6)
         .filter(col("d1") < 10000000L && col("d2") >= 10000000L)
         .select(col("d2").as("new_id"), col("d1").as("corpus_id"), col("hamming")))
     val got = withOneFilePerTrigger("mm_neardup_stream")(
@@ -243,10 +263,12 @@ class MultiBatchStreamSpec extends AnyFunSuite {
     val twins = ids.filter(_ % 20 == 0)
       .map(id => (id + 10000000L, Multimodal.wavFpFixture(id, perturb = true)))
     val fps = Multimodal.decodeFeatures(
-      base.union(twins).toDF("doc_id", "payload"), parallelism = 8,
+      base.union(twins).toDF("doc_id", "payload"),
       decoder = Multimodal.decodeWavAfp, schema = Multimodal.AudioFpSchema)
+    assert(sortedRows(Multimodal.fixtureCorpus(ids.toDF(), Multimodal.WavAfp,
+      twins = true)) == sortedRows(fps))
     val expect = sortedRows(
-      Multimodal.afpNearDupPairs(fps, maxDist = 6)
+      Multimodal.nearDupPairs(fps, "afp", maxDist = 6)
         .filter(col("d1") < 10000000L && col("d2") >= 10000000L)
         .select(col("d2").as("new_id"), col("d1").as("corpus_id"), col("hamming")))
     val got = withOneFilePerTrigger("mm_wav_neardup_stream")(

@@ -158,8 +158,8 @@ class MultimodalWavSpec extends AnyFunSuite {
         Multimodal.ppmDhashFixture(id)).getLong(1)),
       (id + 1000L, Multimodal.decodePpmDhash(id,
         Multimodal.ppmDhashFixture(id, perturb = true)).getLong(1))))
-    val pairs = Multimodal.dhashNearDupPairs(
-        rows.toDF("doc_id", "dhash"), maxDist = 6)
+    val pairs = Multimodal.nearDupPairs(
+        rows.toDF("doc_id", "dhash"), "dhash", maxDist = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     (0L until 50L).foreach(id =>
       assert(pairs.contains((id, id + 1000L)), s"planted twin $id missed"))
@@ -190,8 +190,8 @@ class MultimodalWavSpec extends AnyFunSuite {
       (id, Multimodal.decodeWavAfp(id, Multimodal.wavFpFixture(id)).getLong(1)),
       (id + 1000L, Multimodal.decodeWavAfp(id,
         Multimodal.wavFpFixture(id, perturb = true)).getLong(1))))
-    val pairs = Multimodal.afpNearDupPairs(
-        rows.toDF("doc_id", "afp"), maxDist = 6)
+    val pairs = Multimodal.nearDupPairs(
+        rows.toDF("doc_id", "afp"), "afp", maxDist = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // a >3-bit twin can legitimately miss all four bands (pigeonhole);
     // measured: 49 of these 50 recover
